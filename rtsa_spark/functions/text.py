@@ -66,14 +66,6 @@ def token_stats_by_source(df: DataFrame) -> DataFrame:
     )
 
 
-def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc rolling-hash-style fingerprint: md5 of the normalized text
-    (the cheap dedup key; see operators/dedup.py for the full family)."""
-    return df.withColumn(
-        "fingerprint", F.md5(F.regexp_replace(F.lower(F.col(text_col)), " ", ""))
-    )
-
-
 def winnow_fingerprints(
     df: DataFrame,
     k: int = 4,

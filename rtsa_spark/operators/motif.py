@@ -241,7 +241,11 @@ def sax_words(
         "k",
         "frame",
         "paa_e6",
-        F.expr("char(97 + _below_a div _n)").alias("sym"),
+        # floor of the double quotient is the integer div: the
+        # numerator is far below 2^53, so it never rounds up to a bound
+        F.char(F.lit(97) + F.floor(F.col("_below_a") / F.col("_n"))).alias(
+            "sym"
+        ),
     )
     wf = Window.partitionBy("k").orderBy("frame")
     parts = [F.col("sym")] + [

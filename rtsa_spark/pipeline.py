@@ -11,7 +11,9 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
   ``{run_id, stage, p_month, rows, n_files, bytes, status, finished_at}``
   per published month dir to ``<base>/partition_lineage.jsonl`` (the
   metrics rows of the north rule — what an Iceberg snapshot's manifest
-  entries record per partition);
+  entries record per partition).  Rows are summed from the data files'
+  parquet footers, as Iceberg records each file's ``record_count``, so
+  accounting a stage reads metadata only and launches no Spark job;
 - optional stages per tier: gap-fill, token histograms, metrics, and
   (opt-in via ``encode_tiers``) the Gorilla/DoD encoded-block stage
   ``encoded_<tier>`` — month-partitioned on ``block_day``; blocks are
@@ -56,6 +58,7 @@ import time
 import uuid
 from datetime import datetime, timedelta
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import MapType
@@ -76,6 +79,18 @@ def _parse_ts(x):
     if x is None or isinstance(x, datetime):
         return x
     return datetime.fromisoformat(x)
+
+
+def _parquet_files(d: str | None) -> list[str]:
+    """Parquet data files under a published dir (none for a missing one)."""
+    if d is None:
+        return []
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(d)
+        for f in files
+        if f.endswith(".parquet")
+    ]
 
 
 def _hash_cols(df: DataFrame) -> list:
@@ -207,99 +222,50 @@ class TierPipeline:
     def _partition_ledger_path(self) -> str:
         return os.path.join(self.base, "partition_lineage.jsonl")
 
-    def _append_partition_rows(
-        self, stage: str, path: str, status: str, months: list[str] | None = None
-    ) -> int:
-        """Append one lineage row PER month partition of a published stage
-        (the parquet emulation of an Iceberg snapshot's per-partition
-        manifest entries): ``{run_id, stage, p_month, rows, n_files,
-        bytes, status, finished_at}``. ``months`` restricts accounting to
-        the refreshed partitions (partition-pruned scan). Non-partitioned
-        stages get a single row with ``p_month=None``. Returns the total
-        row count across the accounted partitions, so the caller's stage
-        row needs no second count job."""
-        df = self.spark.read.parquet(path)
-        partitioned = P_MONTH in df.columns
-        if partitioned:
-            if months is not None:
-                df = df.where(F.col(P_MONTH).isin(months))
-            counts = {
-                r[P_MONTH]: r["n"]
-                for r in df.groupBy(P_MONTH).agg(
-                    F.count(F.lit(1)).alias("n")
-                ).collect()
-            }
-            # a refreshed month the recomputation emptied out was DELETED —
-            # record it as a rows=0 manifest row, not a silent omission
-            if months is not None:
-                for m in months:
-                    counts.setdefault(m, 0)
-        else:
-            counts = {None: df.count()}
-        now = time.time()
-        total = 0
-        for month, rows in sorted(counts.items(), key=lambda kv: str(kv[0])):
-            pdir = path if month is None else os.path.join(path, f"{P_MONTH}={month}")
-            n_files = n_bytes = 0
-            for root, _dirs, files in os.walk(pdir):
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        n_files += 1
-                        n_bytes += os.path.getsize(os.path.join(root, fname))
-            self._append_ledger_row(
-                self._partition_ledger_path,
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "p_month": month,
-                    "rows": rows,
-                    "n_files": n_files,
-                    "bytes": n_bytes,
-                    "status": status,
-                    "finished_at": now,
-                },
-            )
-            total += rows
-        return total
-
-    def _append_partition_rows_snap(
-        self,
-        stage: str,
-        store: SnapshotStore,
-        status: str,
-        months: list[str] | None = None,
-    ) -> int:
-        """Snapshot-stage twin of :meth:`_append_partition_rows`: manifest
-        rows account the CURRENT snapshot's mapped version dirs (one row
-        per month; a refreshed month the commit deleted gets rows=0).
-        Returns total rows across the accounted months."""
-        sid = store.current_snapshot()
-        mapping = store.months()
-        df = store.read().select(
-            F.date_format(F.col(store.ts_col), "yyyy-MM").alias("m")
-        )
-        if months is not None:
-            df = df.where(F.col("m").isin(months))
-        counts = {
-            r["m"]: r["n"]
-            for r in df.groupBy("m").agg(F.count(F.lit(1)).alias("n")).collect()
+    def _month_dirs(self, stage: str) -> dict[str | None, str]:
+        """``{p_month: dir}`` of a stage's CURRENT data: the current
+        snapshot's version dirs on a snapshot-backed stage, the
+        ``p_month=`` dirs on a plain one (``{None: stage dir}`` when the
+        stage is not month-partitioned)."""
+        if self._is_snapshot_stage(stage):
+            st = self._store(stage)
+            return {m: st.version_dir(m, v) for m, v in st.months().items()}
+        path = self._stage_path(stage)
+        dirs = {
+            d.split("=", 1)[1]: os.path.join(path, d)
+            for d in os.listdir(path)
+            if d.startswith(f"{P_MONTH}=")
         }
+        return dirs or {None: path}
+
+    def _append_manifest(
+        self, stage: str, status: str, months: list[str] | None = None
+    ) -> tuple[int, int]:
+        """Append one manifest row PER month partition of a published
+        stage (the parquet emulation of an Iceberg snapshot's
+        per-partition manifest entries): ``{run_id, stage, p_month, rows,
+        n_files, bytes, status, finished_at}``, plus ``snapshot_id`` on a
+        snapshot-backed stage.  ``rows`` sums each data file's footer
+        ``num_rows`` (Iceberg's ``record_count``), so accounting reads
+        metadata only and launches no Spark job.  ``months`` restricts
+        accounting to the refreshed partitions; a requested month with no
+        dir was DELETED and gets a rows=0 row, not a silent omission.  A
+        non-partitioned stage gets one row with ``p_month=None``.  Returns
+        ``(rows, n_files)`` over the accounted partitions, so the caller's
+        stage row needs no second count."""
+        dirs = self._month_dirs(stage)
         if months is not None:
-            for m in months:
-                counts.setdefault(m, 0)
+            dirs = {m: dirs.get(m) for m in months}
+        snap = (
+            {"snapshot_id": self._store(stage).current_snapshot()}
+            if self._is_snapshot_stage(stage)
+            else {}
+        )
         now = time.time()
-        total = 0
-        for month, rows in sorted(counts.items()):
-            n_files = n_bytes = 0
-            if month in mapping:
-                vdir = os.path.join(
-                    store._data_dir, f"{P_MONTH}={month}", f"v={mapping[month]}"
-                )
-                for root, _dirs, files in os.walk(vdir):
-                    for fname in files:
-                        if fname.endswith(".parquet"):
-                            n_files += 1
-                            n_bytes += os.path.getsize(os.path.join(root, fname))
+        total_rows = total_files = 0
+        for month, d in sorted(dirs.items(), key=lambda kv: str(kv[0])):
+            files = _parquet_files(d)
+            rows = sum(pq.read_metadata(f).num_rows for f in files)
             self._append_ledger_row(
                 self._partition_ledger_path,
                 {
@@ -307,15 +273,16 @@ class TierPipeline:
                     "stage": stage,
                     "p_month": month,
                     "rows": rows,
-                    "n_files": n_files,
-                    "bytes": n_bytes,
+                    "n_files": len(files),
+                    "bytes": sum(os.path.getsize(f) for f in files),
                     "status": status,
-                    "snapshot_id": sid,
+                    **snap,
                     "finished_at": now,
                 },
             )
-            total += rows
-        return total
+            total_rows += rows
+            total_files += len(files)
+        return total_rows, total_files
 
     @staticmethod
     def _append_ledger_row(ledger_path: str, row: dict) -> None:
@@ -603,72 +570,41 @@ class TierPipeline:
         between data write and log append leaves an orphan no read sees,
         reaped by expire)."""
         final = self._stage_path(stage)
+        t0 = time.time()
+        snap = {}
         if self._is_snapshot_stage(stage):
             st = self._store(stage)
-            t0 = time.time()
             st.publish(df)
-            rows_out = self._append_partition_rows_snap(stage, st, "SUCCESS")
-            mapping = st.months()
-            n_files = sum(
-                1
-                for m, v in mapping.items()
-                for _root, _dirs, files in os.walk(
-                    os.path.join(st._data_dir, f"{P_MONTH}={m}", f"v={v}")
+            snap = {"snapshot_id": st.current_snapshot()}
+        else:
+            tmp = final + f"._tmp_{self.run_id}"
+            writer = df.write.mode("overwrite")
+            if "bucket_start" in df.columns:
+                writer = (
+                    cluster_for_publish(
+                        self._with_month(df), ("source", "bucket_start")
+                    )
+                    .write.mode("overwrite")
+                    .partitionBy(P_MONTH)
                 )
-                for f in files
-                if f.endswith(".parquet")
-            )
-            rows_in = (
-                int(fingerprint.split(":")[0]) if ":" in fingerprint else None
-            )
-            self._append_ledger(
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "rows_in": rows_in,
-                    "rows_out": rows_out,
-                    "n_files": n_files,
-                    "started_at": t0,
-                    "finished_at": time.time(),
-                    "status": "SUCCESS",
-                    "fingerprint": fingerprint,
-                    "snapshot_id": st.current_snapshot(),
-                }
-            )
-            return final
-        tmp = final + f"._tmp_{self.run_id}"
-        t0 = time.time()
-        writer = df.write.mode("overwrite")
-        if "bucket_start" in df.columns:
-            writer = (
-                cluster_for_publish(
-                    self._with_month(df), ("source", "bucket_start")
+            elif "block_day" in df.columns:
+                # encoded-block stages: blocks are calendar-month groups,
+                # so month partitioning keys on block_day and stays
+                # refresh-able
+                writer = (
+                    cluster_for_publish(
+                        self._with_month(df, "block_day"),
+                        ("source", "block_day"),
+                    )
+                    .write.mode("overwrite")
+                    .partitionBy(P_MONTH)
                 )
-                .write.mode("overwrite")
-                .partitionBy(P_MONTH)
-            )
-        elif "block_day" in df.columns:
-            # encoded-block stages: blocks are calendar-month groups, so
-            # month partitioning keys on block_day and stays refresh-able
-            writer = (
-                cluster_for_publish(
-                    self._with_month(df, "block_day"), ("source", "block_day")
-                )
-                .write.mode("overwrite")
-                .partitionBy(P_MONTH)
-            )
-        writer.parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-        # per-partition manifest rows double as the stage row count
-        rows_out = self._append_partition_rows(stage, final, "SUCCESS")
-        n_files = sum(
-            1
-            for _root, _dirs, files in os.walk(final)
-            for f in files
-            if f.endswith(".parquet")
-        )
+            writer.parquet(tmp)
+            if os.path.exists(final):
+                shutil.rmtree(final)
+            os.rename(tmp, final)
+        # per-partition manifest rows double as the stage row/file count
+        rows_out, n_files = self._append_manifest(stage, "SUCCESS")
         rows_in = int(fingerprint.split(":")[0]) if ":" in fingerprint else None
         self._append_ledger(
             {
@@ -681,6 +617,7 @@ class TierPipeline:
                 "finished_at": time.time(),
                 "status": "SUCCESS",
                 "fingerprint": fingerprint,
+                **snap,
             }
         )
         return final
@@ -946,7 +883,7 @@ class TierPipeline:
         prev_fp = truthful_fp
 
         def _overwrite_months(
-            df: DataFrame, path: str, ts_col: str = "bucket_start"
+            df: DataFrame, stage: str, ts_col: str = "bucket_start"
         ) -> None:
             """Dynamic partition overwrite of the affected months, PLUS
             explicit removal of any requested month the recomputation
@@ -962,12 +899,9 @@ class TierPipeline:
             written = {
                 r[P_MONTH] for r in with_m.select(P_MONTH).distinct().collect()
             }
-            existing = {
-                d.split("=", 1)[1]
-                for d in os.listdir(path)
-                if d.startswith(f"{P_MONTH}=")
-            }
-            if not written and not (existing - set(months)):
+            path = self._stage_path(stage)
+            existing = self._month_dirs(stage)
+            if not written and not (set(existing) - {None} - set(months)):
                 # this refresh would delete every month dir the stage has
                 # and write nothing back — a stage with zero partitions is
                 # unreadable (no schema) and certainly an upstream accident
@@ -984,13 +918,11 @@ class TierPipeline:
                 .parquet(path)
             )
             for m in set(months) - written:
-                stale = os.path.join(path, f"{P_MONTH}={m}")
-                if os.path.exists(stale):
-                    shutil.rmtree(stale)
+                if m in existing:
+                    shutil.rmtree(existing[m])
 
         for tier in self.tiers:
             stage = f"rollup_{tier}"
-            path = self._stage_path(stage)
             recomputed = (
                 rollup_raw(affected_seq)
                 if tier == "raw"
@@ -1005,19 +937,14 @@ class TierPipeline:
             if self._is_snapshot_stage(stage):
                 st = self._store(stage)
                 st.refresh_months(recomputed, months)
-                # manifest append returns the month-scoped row total —
-                # no whole-table count on a month-scoped refresh
-                rows_out = self._append_partition_rows_snap(
-                    stage, st, "REFRESH", months=months
-                )
                 snap_extra = {"snapshot_id": st.current_snapshot()}
             else:
-                _overwrite_months(recomputed, path)
-                rows_out = self._append_partition_rows(
-                    stage, path, "REFRESH", months=months
-                )
+                _overwrite_months(recomputed, stage)
                 snap_extra = {}
             recomputed.unpersist()
+            # manifest append returns the month-scoped row total — no
+            # whole-table count on a month-scoped refresh
+            rows_out, _ = self._append_manifest(stage, "REFRESH", months)
             self._append_ledger(
                 {
                     "run_id": self.run_id,
@@ -1078,10 +1005,8 @@ class TierPipeline:
                         hist = token_histogram(
                             affected_seq, tier, top_k=self.hist_top_k
                         )
-                    _overwrite_months(hist, hpath)
-                    h_rows = self._append_partition_rows(
-                        hstage, hpath, "REFRESH", months=months
-                    )
+                    _overwrite_months(hist, hstage)
+                    h_rows, _ = self._append_manifest(hstage, "REFRESH", months)
                     self._append_ledger(
                         {
                             "run_id": self.run_id,
@@ -1113,7 +1038,6 @@ class TierPipeline:
                 # fingerprint would permanently hide every other month from
                 # run() — build the whole stage instead.
                 estage = f"encoded_{tier}"
-                epath = self._stage_path(estage)
                 if not self._stage_exists(estage):
                     self._write_stage(
                         estage,
@@ -1127,24 +1051,18 @@ class TierPipeline:
                         value_col=self.encode_value_col,
                     )
                     if self._is_snapshot_stage(estage):
-                        est = self._store(estage)
-                        est.refresh_months(month_blocks, months)
-                        self._append_partition_rows_snap(
-                            estage, est, "REFRESH", months=months
-                        )
+                        self._store(estage).refresh_months(month_blocks, months)
                     else:
                         _overwrite_months(
-                            month_blocks, epath, ts_col="block_day"
+                            month_blocks, estage, ts_col="block_day"
                         )
-                        self._append_partition_rows(
-                            estage, epath, "REFRESH", months=months
-                        )
+                    e_rows, _ = self._append_manifest(estage, "REFRESH", months)
                     self._append_ledger(
                         {
                             "run_id": self.run_id,
                             "stage": estage,
                             "rows_in": None,
-                            "rows_out": self._read_stage(estage).count(),
+                            "rows_out": e_rows,
                             "n_files": None,
                             "started_at": t1,
                             "finished_at": time.time(),
@@ -1222,22 +1140,17 @@ class TierPipeline:
 
         if self._is_snapshot_stage(stage):
             return self._compact_snapshot_stage(stage, months)
-        path = self._stage_path(stage)
-        month_dirs = sorted(
-            d for d in os.listdir(path) if d.startswith(f"{P_MONTH}=")
-        )
-        if not month_dirs:
+        month_dirs = self._month_dirs(stage)
+        if None in month_dirs:
             raise ValueError(
                 f"stage {stage!r} is not month-partitioned; compaction "
                 f"operates per partition"
             )
         want = set(months) if months is not None else None
         out: dict[str, dict] = {}
-        for d in month_dirs:
-            m = d.split("=", 1)[1]
+        for m, mpath in sorted(month_dirs.items()):
             if want is not None and m not in want:
                 continue
-            mpath = os.path.join(path, d)
             df = self.spark.read.parquet(mpath)
             ts_col = "bucket_start" if "bucket_start" in df.columns else (
                 "block_day" if "block_day" in df.columns else None
@@ -1280,15 +1193,10 @@ class TierPipeline:
             tmp = mpath + f"._compact_{self.run_id}"
             shutil.rmtree(tmp, ignore_errors=True)
             os.makedirs(tmp)
-            files_before = 0
-            for root, _dirs, files in os.walk(mpath):
-                for fname in files:
-                    if not fname.endswith(".parquet"):
-                        continue
-                    files_before += 1
-                    src = os.path.join(root, fname)
-                    if src not in grouped_files:
-                        os.link(src, os.path.join(tmp, fname))
+            files_before = _parquet_files(mpath)
+            for src in files_before:
+                if src not in grouped_files:
+                    os.link(src, os.path.join(tmp, os.path.basename(src)))
             for g, fs in sorted(groups.items()):
                 gtmp = tmp + f".g{g}"
                 (
@@ -1313,15 +1221,9 @@ class TierPipeline:
             os.rename(mpath, old)
             os.rename(tmp, mpath)
             shutil.rmtree(old)
-            self._append_partition_rows(stage, path, "COMPACT", months=[m])
-            files_after = sum(
-                1
-                for _root, _dirs, files in os.walk(mpath)
-                for f in files
-                if f.endswith(".parquet")
-            )
+            _, files_after = self._append_manifest(stage, "COMPACT", [m])
             out[m] = {
-                "files_before": files_before,
+                "files_before": len(files_before),
                 "files_after": files_after,
                 "groups": len(groups),
             }
@@ -1341,24 +1243,15 @@ class TierPipeline:
         (no empty snapshot commits)."""
         store = self._store(stage)
         mapping = store.months()
-
-        def n_files(month: str, mp: dict[str, str]) -> int:
-            vdir = os.path.join(
-                store._data_dir, f"{P_MONTH}={month}", f"v={mp[month]}"
-            )
-            return sum(
-                1
-                for _root, _dirs, files in os.walk(vdir)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
         want = (
             sorted(mapping)
             if months is None
             else [m for m in months if m in mapping]
         )
-        before = {m: n_files(m, mapping) for m in want}
+        before = {
+            m: len(_parquet_files(store.version_dir(m, mapping[m])))
+            for m in want
+        }
         frag = [m for m in want if before[m] >= 2]
         if not frag:
             return {}
@@ -1376,14 +1269,14 @@ class TierPipeline:
                 cur, frag, extra={"reason": "compact"},
                 expect_versions={m: mapping[m] for m in frag},
             )
-        self._append_partition_rows_snap(
-            stage, store, "COMPACT", months=None if months is None else frag
+        self._append_manifest(
+            stage, "COMPACT", None if months is None else frag
         )
-        after_map = store.months()
+        after = store.months()
         return {
             m: {
                 "files_before": before[m],
-                "files_after": n_files(m, after_map),
+                "files_after": len(_parquet_files(store.version_dir(m, after[m]))),
                 "groups": 1,
             }
             for m in frag

@@ -99,11 +99,3 @@ def rollup_raw_salted(
     )
     return _finalize(merged).select(ROLLUP_COLS)
 
-
-def repartition_for_kernel(
-    df: DataFrame, keys: list[str], partitions: int | None = None
-) -> DataFrame:
-    """Explicit repartition on kernel group keys so the subsequent
-    applyInPandas reuses the exchange instead of adding its own."""
-    cols = [F.col(k) for k in keys]
-    return df.repartition(partitions, *cols) if partitions else df.repartition(*cols)

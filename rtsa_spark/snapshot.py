@@ -111,6 +111,13 @@ class SnapshotStore:
     def _data_dir(self) -> str:
         return os.path.join(self.base, "data")
 
+    def version_dir(self, month: str, version: str) -> str:
+        """Data dir of one month's version (``p_month=…/v=…``) — how
+        callers outside the store locate a snapshot's files."""
+        return os.path.join(
+            self._data_dir, f"{P_MONTH}={month}", f"{V_COL}={version}"
+        )
+
     @property
     def _log_path(self) -> str:
         return os.path.join(self.base, "snapshots.jsonl")
@@ -900,7 +907,7 @@ class SnapshotStore:
         in the snapshot); driver-side, as metadata tables are."""
         rows = []
         for m, v in sorted(self.months(asof=asof).items()):
-            vdir = os.path.join(self._data_dir, f"{P_MONTH}={m}", f"{V_COL}={v}")
+            vdir = self.version_dir(m, v)
             for fn in sorted(os.listdir(vdir)):
                 fp = os.path.join(vdir, fn)
                 if fn.endswith(".parquet") and os.path.isfile(fp):
@@ -948,10 +955,7 @@ class SnapshotStore:
             mapping = {m: v for m, v in mapping.items() if m <= month_hi}
         if not mapping:
             return self.spark.createDataFrame([], schema)
-        dirs = [
-            os.path.join(self._data_dir, f"{P_MONTH}={m}", f"{V_COL}={v}")
-            for m, v in sorted(mapping.items())
-        ]
+        dirs = [self.version_dir(m, v) for m, v in sorted(mapping.items())]
         return (
             self.spark.read.schema(schema)
             .option("basePath", self._data_dir)
@@ -1010,12 +1014,7 @@ class SnapshotStore:
         def _subset(mapping: dict[str, str], months_: list[str]) -> DataFrame:
             if not months_:
                 return self.spark.createDataFrame([], schema).select(cols)
-            dirs = [
-                os.path.join(
-                    self._data_dir, f"{P_MONTH}={m}", f"{V_COL}={mapping[m]}"
-                )
-                for m in months_
-            ]
+            dirs = [self.version_dir(m, mapping[m]) for m in months_]
             return (
                 self.spark.read.schema(schema)
                 .option("basePath", self._data_dir)

@@ -5,6 +5,7 @@ import os
 import pytest
 
 from rtsa_spark.pipeline import TierPipeline
+from tests.fragment import split_parquet_dir
 from rtsa_spark.plans.skew import dominant_keys, rollup_raw_salted
 from rtsa_spark.operators.rollup import rollup_raw
 
@@ -61,33 +62,123 @@ def test_lineage_table(spark, tiny_sequences, tmp_path):
     assert rows["rollup_monthly"]["rows_out"] <= rows["rollup_daily"]["rows_out"]
 
 
+def _manifest(p):
+    import json
+
+    if not os.path.exists(p._partition_ledger_path):
+        return []
+    with open(p._partition_ledger_path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
 def test_partition_lineage_manifest(spark, tiny_sequences, tmp_path):
-    """Every published stage gets per-month manifest rows whose row/file
-    counts reconcile with the stage ledger and the bytes on disk."""
+    """Every manifest row's ``rows`` equals an independent Spark count of
+    ``read_stage(stage)`` for its month — plain, snapshot-backed and
+    non-partitioned stages, after run, a month-deleting refresh and a
+    compaction — and accounting a stage launches no Spark job."""
+    import time
+
     import pyspark.sql.functions as F
 
-    d = str(tmp_path / "plin")
-    p = TierPipeline(spark, d, metrics_tiers=())
-    p.run(tiny_sequences)
-    stage_rows = {r["stage"]: r for r in p._ledger()}
-    parts = [r.asDict() for r in p.partition_lineage().collect()]
-    by_stage: dict[str, list[dict]] = {}
-    for r in parts:
-        by_stage.setdefault(r["stage"], []).append(r)
+    p = TierPipeline(spark, str(tmp_path / "plin"), snapshot_tiers=("hourly",))
 
-    months = {
+    def appended_by(op):
+        n = len(_manifest(p))
+        op()
+        return _manifest(p)[n:]
+
+    def assert_counts(rows, whole=False):
+        """``whole``: the rows account entire stages, so each stage's
+        manifest months must also be exactly the months it holds."""
+        by_stage: dict[str, dict] = {}
+        for r in rows:
+            by_stage.setdefault(r["stage"], {})[r["p_month"]] = r
+        for stage, got in by_stage.items():
+            df = p.read_stage(stage)
+            ts = next(
+                (c for c in ("bucket_start", "block_day") if c in df.columns),
+                None,
+            )
+            month = (
+                F.date_format(ts, "yyyy-MM") if ts else F.lit(None).cast("string")
+            )
+            want = {
+                r["m"]: r["count"]
+                for r in df.groupBy(month.alias("m")).count().collect()
+            }
+            if whole:
+                assert set(got) == set(want), (stage, sorted(got, key=str), want)
+            for m, r in got.items():
+                assert r["rows"] == want.get(m, 0), (stage, m, r, want)
+                assert (r["n_files"] >= 1 and r["bytes"] > 0) == (
+                    r["rows"] > 0
+                ), r
+        return by_stage
+
+    built = assert_counts(appended_by(lambda: p.run(tiny_sequences)), whole=True)
+    assert set(built) == {r["stage"] for r in p._ledger()}
+    assert set(built["metrics_daily"]) == {None}
+    # every month-partitioned stage covers exactly the input's months
+    months = sorted(
         r["m"]
-        for r in tiny_sequences.select(
-            F.date_format("ts", "yyyy-MM").alias("m")
-        ).distinct().collect()
+        for r in tiny_sequences.select(F.date_format("ts", "yyyy-MM").alias("m"))
+        .distinct()
+        .collect()
+    )
+    assert len(months) >= 2
+    for stage, got in built.items():
+        if stage != "metrics_daily":
+            assert sorted(got) == months, stage
+    assert all("snapshot_id" in r for r in built["rollup_hourly"].values())
+
+    # a correction that empties the last month: REFRESH rows record rows=0
+    last = months[-1]
+    corrected = tiny_sequences.where(F.date_format("ts", "yyyy-MM") != last)
+    refreshed = assert_counts(
+        appended_by(lambda: p.refresh_months(corrected, [last]))
+    )
+    for t in p.tiers:
+        assert set(refreshed[f"rollup_{t}"]) == {last}
+        assert refreshed[f"rollup_{t}"][last]["rows"] == 0
+
+    first = months[0]
+    for stage in ("rollup_raw", "rollup_hourly"):
+        split_parquet_dir(spark, p._month_dirs(stage)[first], 3)
+    compacted = assert_counts(
+        appended_by(
+            lambda: [
+                p.compact_stage(s, 10**9, months=[first])
+                for s in ("rollup_raw", "rollup_hourly")
+            ]
+        )
+    )
+    assert {s: set(ms) for s, ms in compacted.items()} == {
+        "rollup_raw": {first},
+        "rollup_hourly": {first},
     }
-    for stage, prs in by_stage.items():
-        # partition grain: one row per month dir, all carrying real sizes
-        assert {r["p_month"] for r in prs} == months, stage
-        assert sum(r["rows"] for r in prs) == stage_rows[stage]["rows_out"], stage
-        assert sum(r["n_files"] for r in prs) == stage_rows[stage]["n_files"], stage
-        assert all(r["bytes"] > 0 and r["n_files"] >= 1 for r in prs), stage
-    assert set(by_stage) == set(stage_rows)  # every stage has manifest rows
+    assert compacted["rollup_raw"][first]["n_files"] == 1
+
+    # accounting reads parquet footers only: no Spark job in its group.
+    # The control job's group is seen only after every earlier job event
+    # reached the status store, so an empty accounting group is no race.
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    n_audit = len(_manifest(p))
+    try:
+        sc.setJobGroup("manifest-accounting", "manifest accounting")
+        for stage in built:
+            p._append_manifest(stage, "AUDIT")
+        sc.setJobGroup("manifest-control", "control job")
+        p.read_stage("rollup_raw").count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("manifest-control"):
+        assert time.time() < deadline, "control job never reached the tracker"
+        time.sleep(0.1)
+    assert list(tracker.getJobIdsForGroup("manifest-accounting")) == []
+    # the whole-stage audit still covers exactly the months each stage holds
+    assert_counts(_manifest(p)[n_audit:], whole=True)
 
 
 def test_partition_lineage_refresh_scoped(spark, tiny_sequences, tmp_path):
@@ -96,22 +187,15 @@ def test_partition_lineage_refresh_scoped(spark, tiny_sequences, tmp_path):
     rewritten and log SUCCESS rows)."""
     import pyspark.sql.functions as F
 
-    import json
-
     d = str(tmp_path / "plref")
     p = TierPipeline(spark, d, gapfill_tiers=(), metrics_tiers=())
     p.run(tiny_sequences)
-
-    def _rows():
-        with open(p._partition_ledger_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    n_before = len(_rows())
+    n_before = len(_manifest(p))
     month = tiny_sequences.select(
         F.date_format("ts", "yyyy-MM").alias("m")
     ).agg(F.min("m")).first()[0]
     p.refresh_months(tiny_sequences, [month])
-    fresh = _rows()[n_before:]
+    fresh = _manifest(p)[n_before:]
     refresh_rows = [r for r in fresh if r["status"] == "REFRESH"]
     assert refresh_rows and all(r["p_month"] == month for r in refresh_rows)
     assert {r["stage"] for r in refresh_rows} == {
@@ -183,7 +267,22 @@ def test_encoded_stage_publish_resume_refresh(spark, tiny_sequences, tmp_path):
     corrected = tiny_sequences.withColumn(
         "n_tok", F.when(feb, F.col("n_tok") * 2).otherwise(F.col("n_tok"))
     )
+    n_manifest = len(_manifest(p))
     p.refresh_months(corrected, ["2024-02"])
+    # the REFRESH ledger row counts the refreshed month, not the stage
+    e_ledger = [
+        r for r in p._ledger()
+        if r["stage"] == "encoded_hourly" and r["status"] == "REFRESH"
+    ]
+    e_manifest = [
+        r for r in _manifest(p)[n_manifest:] if r["stage"] == "encoded_hourly"
+    ]
+    feb_blocks = spark.read.parquet(os.path.join(base, "encoded_hourly")).where(
+        F.col("p_month") == "2024-02"
+    )
+    assert len(e_ledger) == 1 and [r["p_month"] for r in e_manifest] == ["2024-02"]
+    assert e_ledger[0]["rows_out"] == sum(r["rows"] for r in e_manifest)
+    assert e_ledger[0]["rows_out"] == feb_blocks.count() > 0
     after = _file_digests(os.path.join(base, "encoded_hourly"))
     changed = {k for k in before if after.get(k) != before[k]}
     assert changed and all("p_month=2024-02" in k for k in changed)

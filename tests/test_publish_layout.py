@@ -17,6 +17,7 @@ import os
 import pyspark.sql.functions as F
 
 from rtsa_spark.pipeline import TierPipeline
+from tests.fragment import split_parquet_dir
 
 
 def _parquet_files(root):
@@ -290,25 +291,9 @@ def test_compact_stage_preserves_content_and_shrinks_files(
 def _fragment_snapshot_months(spark, store, months=None):
     """Test fixture: split each current-version month dir into 4 unsorted
     files (simulating fragmented historical writes) by os-level swap."""
-    import shutil
-
     for month, ver in store.months().items():
-        if months is not None and month not in months:
-            continue
-        vdir = os.path.join(store._data_dir, f"p_month={month}", f"v={ver}")
-        side = vdir + "_fragtmp"
-        spark.read.parquet(vdir).repartition(4).write.mode(
-            "overwrite"
-        ).parquet(side)
-        for f in _parquet_files(vdir):
-            os.remove(f)
-        for i, f in enumerate(sorted(os.listdir(side))):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(side, f),
-                    os.path.join(vdir, f"frag-{i}.parquet"),
-                )
-        shutil.rmtree(side)
+        if months is None or month in months:
+            split_parquet_dir(spark, store.version_dir(month, ver), 4)
 
 
 def test_compact_stage_snapshot_rewrite(spark, tiny_sequences, tmp_path):
@@ -350,9 +335,7 @@ def test_compact_stage_snapshot_rewrite(spark, tiny_sequences, tmp_path):
     cur_files = [
         f
         for m, v in store.months().items()
-        for f in _parquet_files(
-            os.path.join(store._data_dir, f"p_month={m}", f"v={v}")
-        )
+        for f in _parquet_files(store.version_dir(m, v))
     ]
     _assert_sorted_files(cur_files, ["source", "bucket_start"])
     # manifest: COMPACT rows with the committing snapshot id

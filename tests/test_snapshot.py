@@ -154,12 +154,11 @@ def test_expire_deletes_unreferenced_and_orphans(spark, tier, tmp_path):
     # orphan: a crashed writer's version dir no snapshot references.
     # Backdate its mtime past the in-flight grace window — a FRESH
     # never-referenced dir must survive (it may be an uncommitted write)
-    data = os.path.join(str(tmp_path / "st"), "data")
-    orphan = os.path.join(data, "p_month=2024-02", "v=deadbeef0000")
+    orphan = st.version_dir("2024-02", "deadbeef0000")
     os.makedirs(orphan)
     with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
         f.write(b"x" * 128)
-    fresh = os.path.join(data, "p_month=2024-02", "v=feedface0000")
+    fresh = st.version_dir("2024-02", "feedface0000")
     os.makedirs(fresh)
     import time as _time
 
