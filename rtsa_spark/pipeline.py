@@ -19,8 +19,8 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
   ``encoded_<tier>`` — month-partitioned on ``block_day``; blocks are
   calendar-month groups by construction, so late-data refreshes re-encode
   only the affected months' partitions like the tiers themselves;
-- a stage is SKIPPED on re-run when a SUCCESS lineage row exists whose
-  input fingerprint matches. The fingerprint is a CONTENT hash
+- a stage is SKIPPED on re-run when a SUCCESS or REFRESH lineage row
+  exists whose input fingerprint matches. The fingerprint is a CONTENT hash
   (``count:bit_xor(xxhash64(*cols))``, order-independent, one cheap
   columnar scan) — a corrected input with the same row count no longer
   silently skips recomputation. On Iceberg the seam is the snapshot id;
@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -71,6 +72,7 @@ from rtsa_spark.snapshot import SnapshotStore
 from rtsa_spark.storage import cluster_for_publish
 
 P_MONTH = "p_month"
+_MONTH_RE = re.compile(r"\d{4}-(0[1-9]|1[0-2])")
 
 
 def _parse_ts(x):
@@ -91,6 +93,23 @@ def _parquet_files(d: str | None) -> list[str]:
         for f in files
         if f.endswith(".parquet")
     ]
+
+
+def _time_col(df: DataFrame) -> str | None:
+    """The column a stage is month-partitioned on: ``bucket_start`` for
+    tier-shaped stages, ``block_day`` for encoded-block stages (blocks are
+    calendar-month groups, so they stay refresh-able), None for a stage
+    with no time axis."""
+    for c in ("bucket_start", "block_day"):
+        if c in df.columns:
+            return c
+    return None
+
+
+def _rollup(tier: str, seq: DataFrame, finer: DataFrame | None) -> DataFrame:
+    """The rollup cascade: the raw tier from sequences, every coarser tier
+    from the finer one."""
+    return rollup_raw(seq) if tier == "raw" else rollup_next(finer, tier)
 
 
 def _hash_cols(df: DataFrame) -> list:
@@ -556,14 +575,14 @@ class TierPipeline:
         return {s: self._store(s).expire(keep_last) for s in stages}
 
     @staticmethod
-    def _with_month(df: DataFrame, ts_col: str = "bucket_start") -> DataFrame:
+    def _with_month(df: DataFrame, ts_col: str) -> DataFrame:
         return df.withColumn(
             P_MONTH, F.date_format(F.col(ts_col), "yyyy-MM")
         )
 
-    def _write_stage(self, stage: str, df: DataFrame, fingerprint: str) -> str:
+    def _write_stage(self, stage: str, df: DataFrame, fingerprint: str) -> None:
         """Compute + atomically publish one stage, ledger-logged.
-        Bucket-bearing stages are written partitionBy(month) so late-data
+        Time-bearing stages are written partitionBy(month) so late-data
         refreshes can swap single partition dirs. Snapshot-backed stages
         publish through their store instead: append-only version dirs +
         snapshot-log commit play the tmp-write + atomic rename (a crash
@@ -578,28 +597,18 @@ class TierPipeline:
             snap = {"snapshot_id": st.current_snapshot()}
         else:
             tmp = final + f"._tmp_{self.run_id}"
-            writer = df.write.mode("overwrite")
-            if "bucket_start" in df.columns:
-                writer = (
+            ts_col = _time_col(df)
+            if ts_col is None:
+                df.write.mode("overwrite").parquet(tmp)
+            else:
+                (
                     cluster_for_publish(
-                        self._with_month(df), ("source", "bucket_start")
+                        self._with_month(df, ts_col), ("source", ts_col)
                     )
                     .write.mode("overwrite")
                     .partitionBy(P_MONTH)
+                    .parquet(tmp)
                 )
-            elif "block_day" in df.columns:
-                # encoded-block stages: blocks are calendar-month groups,
-                # so month partitioning keys on block_day and stays
-                # refresh-able
-                writer = (
-                    cluster_for_publish(
-                        self._with_month(df, "block_day"),
-                        ("source", "block_day"),
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy(P_MONTH)
-                )
-            writer.parquet(tmp)
             if os.path.exists(final):
                 shutil.rmtree(final)
             os.rename(tmp, final)
@@ -620,12 +629,129 @@ class TierPipeline:
                 **snap,
             }
         )
-        return final
+
+    def _refresh_stage(
+        self,
+        stage: str,
+        df: DataFrame,
+        months: list[str],
+        fingerprint: str,
+        rows_in: int | None = None,
+    ) -> None:
+        """REFRESH twin of :meth:`_write_stage`: swap only ``months`` of a
+        published stage for ``df``'s rows — a month-scoped snapshot commit
+        on a snapshot-backed stage, a dynamic partition overwrite on a
+        plain one — then account those months and append the stage's
+        REFRESH ledger row."""
+        t0 = time.time()
+        snap = {}
+        if self._is_snapshot_stage(stage):
+            st = self._store(stage)
+            st.refresh_months(df, months)
+            snap = {"snapshot_id": st.current_snapshot()}
+        else:
+            self._overwrite_months(stage, df, months)
+        # month-scoped manifest total — no whole-table count
+        rows_out, _ = self._append_manifest(stage, "REFRESH", months)
+        self._append_ledger(
+            {
+                "run_id": self.run_id,
+                "stage": stage,
+                "rows_in": rows_in,
+                "rows_out": rows_out,
+                "n_files": None,
+                "started_at": t0,
+                "finished_at": time.time(),
+                "status": "REFRESH",
+                "fingerprint": fingerprint,
+                "months": months,
+                **snap,
+            }
+        )
+
+    def _overwrite_months(
+        self, stage: str, df: DataFrame, months: list[str]
+    ) -> None:
+        """Dynamic partition overwrite of the affected months of a plain
+        stage, PLUS explicit removal of any requested month the
+        recomputation produced no rows for — dynamic mode only touches
+        partitions present in the frame, so a fully-deleted month would
+        otherwise survive as a stale partition dir forever."""
+        ts_col = _time_col(df)
+        # defensive scope to the requested months (same rail as
+        # SnapshotStore.refresh_months): a recomputed frame must never
+        # overwrite a neighbor month's partition with partial content
+        with_m = self._with_month(df, ts_col).where(F.col(P_MONTH).isin(months))
+        written = {
+            r[P_MONTH] for r in with_m.select(P_MONTH).distinct().collect()
+        }
+        path = self._stage_path(stage)
+        existing = self._month_dirs(stage)
+        if not written and not (set(existing) - {None} - set(months)):
+            # this refresh would delete every month dir the stage has
+            # and write nothing back — a stage with zero partitions is
+            # unreadable (no schema) and certainly an upstream accident
+            raise ValueError(
+                f"refresh of {sorted(months)} would empty {path} "
+                f"entirely; remove the base dir explicitly to tear "
+                f"the table down"
+            )
+        (
+            cluster_for_publish(with_m, ("source", ts_col))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(P_MONTH)
+            .parquet(path)
+        )
+        for m in set(months) - written:
+            if m in existing:
+                shutil.rmtree(existing[m])
+
+    def _hist(
+        self, tier: str, seq: DataFrame, months: list[str] | None = None
+    ) -> DataFrame:
+        """The hist-cascade rule: the first hist tier is built from raw
+        tokens with ``hist_top_k``; coarser hist tiers merge the finer
+        published hist stage (a direct rebuild would change top-k
+        truncation).  ``months`` scopes the merge input to those months;
+        ``seq`` must already be scoped the same way."""
+        from rtsa_spark.operators.rollup import (
+            merge_token_histograms,
+            token_histogram,
+        )
+
+        finer = next(
+            (f"hist_{t}" for t in reversed(self.tiers[: self.tiers.index(tier)])
+             if t in self.hist_tiers),
+            None,
+        )
+        if finer and self._stage_exists(finer):
+            return merge_token_histograms(
+                self._read_stage(finer)
+                if months is None
+                else self._read_stage_months(finer, months),
+                tier,
+            )
+        return token_histogram(seq, tier, top_k=self.hist_top_k)
 
     def run(self, sequences: DataFrame, fail_after: str | None = None) -> dict[str, str]:
         """Execute the ladder; returns {stage: path}. ``fail_after`` injects
-        a crash after the named stage commits (resume testing)."""
+        a crash right after the named stage commits — or is found already
+        committed — for any stage the run publishes: rollup, gapfilled,
+        encoded, hist or metrics (resume testing)."""
         out: dict[str, str] = {}
+
+        def publish(stage: str, fp: str, build) -> None:
+            # skip a stage whose input fingerprint already committed;
+            # _stage_exists, not os.path.exists: a snapshot-backed stage's
+            # dir exists as soon as its store object is built, with no
+            # committed snapshot behind it
+            if not (self._completed(stage, fp) and self._stage_exists(stage)):
+                self._write_stage(stage, build(), fp)
+            out[stage] = self._stage_path(stage)
+            if fail_after == stage:
+                raise RuntimeError(f"injected failure after {stage}")
+
         prev_df: DataFrame | None = None
         # month-grain fingerprints combine into the global one (same single
         # scan), and publishing them is what lets refresh_changed() detect
@@ -644,87 +770,31 @@ class TierPipeline:
         seq_fp = prev_fp
         for tier in self.tiers:
             stage = f"rollup_{tier}"
-            path = self._stage_path(stage)
-            if self._completed(stage, prev_fp) and self._stage_exists(stage):
-                tier_df = self._read_stage(stage)
-            else:
-                computed = (
-                    rollup_raw(sequences)
-                    if tier == "raw"
-                    else rollup_next(prev_df, tier)
-                )
-                self._write_stage(stage, computed, prev_fp)
-                tier_df = self._read_stage(stage)
-            out[stage] = path
-            if fail_after == stage:
-                raise RuntimeError(f"injected failure after {stage}")
+            publish(stage, prev_fp, lambda: _rollup(tier, sequences, prev_df))
+            tier_df = self._read_stage(stage)
             # one fingerprint job per tier, shared by every dependent stage
             # (gapfill / encode / next-tier completion check)
             tier_fp = content_fingerprint(tier_df)
-
             if tier in self.gapfill_tiers:
-                gstage = f"gapfilled_{tier}"
-                gpath = self._stage_path(gstage)
-                if not (self._completed(gstage, tier_fp) and os.path.exists(gpath)):
-                    self._write_stage(gstage, gapfill_linear(tier_df, tier), tier_fp)
-                out[gstage] = gpath
-                if fail_after == gstage:
-                    raise RuntimeError(f"injected failure after {gstage}")
-
-            if tier in self.encode_tiers:
-                estage = f"encoded_{tier}"
-                epath = self._stage_path(estage)
-                # _stage_exists, not os.path.exists: a snapshot-backed
-                # stage's dir exists as soon as its store object is built,
-                # with no committed snapshot behind it
-                if not (
-                    self._completed(estage, tier_fp)
-                    and self._stage_exists(estage)
-                ):
-                    self._write_stage(
-                        estage,
-                        encode_tier(tier_df, value_col=self.encode_value_col),
-                        tier_fp,
-                    )
-                out[estage] = epath
-                if fail_after == estage:
-                    raise RuntimeError(f"injected failure after {estage}")
-
-            if tier in self.hist_tiers:
-                from rtsa_spark.operators.rollup import (
-                    merge_token_histograms,
-                    token_histogram,
+                publish(
+                    f"gapfilled_{tier}", tier_fp, lambda: gapfill_linear(tier_df, tier)
                 )
-
-                hstage = f"hist_{tier}"
-                hpath = self._stage_path(hstage)
-                if not (self._completed(hstage, seq_fp) and os.path.exists(hpath)):
-                    # first hist tier computes from raw sequences; coarser
-                    # hist tiers cascade by map-sum merge of the previous one
-                    finer = next(
-                        (f"hist_{t}" for t in reversed(self.tiers[: self.tiers.index(tier)])
-                         if t in self.hist_tiers),
-                        None,
-                    )
-                    if finer and os.path.exists(self._stage_path(finer)):
-                        hist = merge_token_histograms(self._read_stage(finer), tier)
-                    else:
-                        hist = token_histogram(
-                            sequences, tier, top_k=self.hist_top_k
-                        )
-                    self._write_stage(hstage, hist, seq_fp)
-                out[hstage] = hpath
-
+            if tier in self.encode_tiers:
+                publish(
+                    f"encoded_{tier}",
+                    tier_fp,
+                    lambda: encode_tier(tier_df, value_col=self.encode_value_col),
+                )
+            if tier in self.hist_tiers:
+                publish(f"hist_{tier}", seq_fp, lambda: self._hist(tier, sequences))
             if tier in self.metrics_tiers:
-                mstage = f"metrics_{tier}"
-                mpath = self._stage_path(mstage)
                 src = f"gapfilled_{tier}" if tier in self.gapfill_tiers else stage
                 mdf = self._read_stage(src)
-                m_fp = content_fingerprint(mdf)
-                if not (self._completed(mstage, m_fp) and os.path.exists(mpath)):
-                    self._write_stage(mstage, compute_metrics(mdf, tier), m_fp)
-                out[mstage] = mpath
-
+                publish(
+                    f"metrics_{tier}",
+                    content_fingerprint(mdf),
+                    lambda: compute_metrics(mdf, tier),
+                )
             prev_df = tier_df
             prev_fp = tier_fp
         # published-input month map, written only once every stage is
@@ -762,6 +832,11 @@ class TierPipeline:
         the late-data seam of the north rule — on Iceberg the same diff
         falls out of snapshot changelogs; here the month fingerprints
         recorded at publish time play that role."""
+        return self._detect(sequences)[0]
+
+    def _detect(self, sequences: DataFrame) -> tuple[dict, dict[str, str]]:
+        """:meth:`detect_changed_months` plus the input's month map, so a
+        refresh that follows reuses the one scan."""
         published = self._read_input_months()
         if published is None:
             raise ValueError(
@@ -776,17 +851,17 @@ class TierPipeline:
             ),
             "added": sorted(m for m in new if m not in published),
             "removed": sorted(m for m in published if m not in new),
-        }
+        }, new
 
     def refresh_changed(self, sequences: DataFrame) -> dict[str, int]:
         """Detect months whose input content changed and refresh exactly
         those (added months publish, emptied months delete).  No-op (empty
         dict) when the input matches the published fingerprints."""
-        diff = self.detect_changed_months(sequences)
+        diff, seq_months = self._detect(sequences)
         months = sorted(set(diff["changed"] + diff["added"] + diff["removed"]))
         if not months:
             return {}
-        return self.refresh_months(sequences, months)
+        return self._refresh(sequences, months, seq_months)
 
     def sync(self, sequences: DataFrame) -> dict:
         """Make the published tiers match ``sequences`` with the cheapest
@@ -815,23 +890,38 @@ class TierPipeline:
     def refresh_months(self, sequences: DataFrame, months: list[str]) -> dict[str, int]:
         """Idempotent partition-scoped refresh for late/replayed data.
 
-        ``months``: 'YYYY-MM' strings whose source rows changed. For every
-        rollup/hist tier, ONLY the affected ``p_month`` partition dirs are
-        rewritten (Spark dynamic partition overwrite — the parquet emulation
-        of Iceberg ``overwritePartitions``); all other partition dirs are
-        left byte-identical on disk (asserted in tests/test_refresh.py).
-        Downstream gapfill/metrics stages are then recomputed from the
-        refreshed tiers (they are tier-sized, and their window/per-source
-        semantics span month boundaries, so partial recompute would be
-        incorrect) — this also closes the staleness hole where a refresh
-        left derived stages behind a matching fingerprint.
+        ``months``: a non-empty list of 'YYYY-MM' strings whose source rows
+        changed; anything else raises ``ValueError`` before any write.  For
+        every rollup, hist and encoded stage, ONLY the affected ``p_month``
+        partitions are rewritten (Spark dynamic partition overwrite — the
+        parquet emulation of Iceberg ``overwritePartitions`` — or a
+        month-scoped commit on a snapshot-backed stage); all other
+        partition dirs are left byte-identical on disk (asserted in
+        tests/test_refresh.py).  Downstream gapfill/metrics stages are then
+        recomputed whole from the refreshed tiers (they are tier-sized, and
+        their window/per-source semantics span month boundaries, so partial
+        recompute would be incorrect) — this also closes the staleness hole
+        where a refresh left derived stages behind a matching fingerprint.
 
-        SUCCESS ledger rows with the post-refresh input fingerprints are
-        appended, so a subsequent ``run(corrected)`` skips every stage.
+        Each month-scoped stage appends a REFRESH ledger row, each rebuilt
+        one a SUCCESS row, all with the post-refresh input fingerprints, so
+        a subsequent ``run(corrected)`` skips every stage.
 
         Returns {stage: rows_replaced}.
         """
-        replaced: dict[str, int] = {}
+        if not months or not all(
+            isinstance(m, str) and _MONTH_RE.fullmatch(m) for m in months
+        ):
+            raise ValueError(
+                f"months must be a non-empty list of 'YYYY-MM' strings; "
+                f"got {months!r}"
+            )
+        return self._refresh(sequences, months, month_fingerprints(sequences))
+
+    def _refresh(
+        self, sequences: DataFrame, months: list[str], seq_months: dict[str, str]
+    ) -> dict[str, int]:
+        """Body of :meth:`refresh_months`, given the input's month map."""
         # Partition-scoped overwrite presupposes a prior full publish: a
         # missing tier dir would make _overwrite_months create a dir holding
         # ONLY the refreshed months while the ledger records the full-input
@@ -848,12 +938,6 @@ class TierPipeline:
                 f"refresh_months requires a completed run() first; missing "
                 f"stage dirs: {missing}"
             )
-        affected_seq = sequences.where(
-            F.date_format(F.col("ts"), "yyyy-MM").isin(months)
-        )
-        in_months = F.col(P_MONTH).isin(months)
-        prev_recomputed: DataFrame | None = None
-        seq_months = month_fingerprints(sequences)
         if not seq_months:
             # same rail as run(): an all-empty "correction" deleting every
             # published month is an upstream accident, not a refresh. A
@@ -865,235 +949,91 @@ class TierPipeline:
                 "explicitly to tear the table down"
             )
         seq_fp = combine_month_fingerprints(seq_months)
-        # the TRUTHFUL post-refresh fingerprint: the published month map
-        # with only the refreshed months replaced.  Recording seq_fp (the
-        # full corrected input) on a SUBSET refresh would make a later
-        # run(corrected) skip stages whose other months are still stale.
-        published_now = self._read_input_months()
-        if published_now:
-            truthful = dict(published_now)
-            for m in months:
-                truthful.pop(m, None)
-            truthful.update(
-                {m: fp for m, fp in seq_months.items() if m in set(months)}
-            )
-            truthful_fp = combine_month_fingerprints(truthful)
-        else:
-            truthful_fp = seq_fp  # pre-month-map table: best available
-        prev_fp = truthful_fp
+        # The published month map with ONLY the refreshed months replaced
+        # (not the whole new map): if the caller named a subset of the
+        # months that really changed, the others keep their old published
+        # fingerprint and detect_changed_months still flags them later.
+        # It also gives the TRUTHFUL post-refresh fingerprint: recording
+        # seq_fp (the full corrected input) on a SUBSET refresh would make
+        # a later run(corrected) skip stages whose other months are stale.
+        published = self._read_input_months()
+        month_map = {
+            m: fp for m, fp in (published or {}).items() if m not in months
+        }
+        month_map.update({m: fp for m, fp in seq_months.items() if m in months})
+        # a pre-month-map table: the full input is the best available
+        prev_fp = truthful_fp = (
+            combine_month_fingerprints(month_map) if published else seq_fp
+        )
+        affected_seq = sequences.where(
+            F.date_format(F.col("ts"), "yyyy-MM").isin(months)
+        )
+        replaced: dict[str, int] = {}
 
-        def _overwrite_months(
-            df: DataFrame, stage: str, ts_col: str = "bucket_start"
-        ) -> None:
-            """Dynamic partition overwrite of the affected months, PLUS
-            explicit removal of any requested month the recomputation
-            produced no rows for — dynamic mode only touches partitions
-            present in the frame, so a fully-deleted month would otherwise
-            survive as a stale partition dir forever."""
-            # defensive scope to the requested months (same rail as
-            # SnapshotStore.refresh_months): a recomputed frame must never
-            # overwrite a neighbor month's partition with partial content
-            with_m = self._with_month(df, ts_col).where(
-                F.col(P_MONTH).isin(months)
-            )
-            written = {
-                r[P_MONTH] for r in with_m.select(P_MONTH).distinct().collect()
-            }
-            path = self._stage_path(stage)
-            existing = self._month_dirs(stage)
-            if not written and not (set(existing) - {None} - set(months)):
-                # this refresh would delete every month dir the stage has
-                # and write nothing back — a stage with zero partitions is
-                # unreadable (no schema) and certainly an upstream accident
-                raise ValueError(
-                    f"refresh of {sorted(months)} would empty {path} "
-                    f"entirely; remove the base dir explicitly to tear "
-                    f"the table down"
-                )
-            (
-                cluster_for_publish(with_m, ("source", ts_col))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(P_MONTH)
-                .parquet(path)
-            )
-            for m in set(months) - written:
-                if m in existing:
-                    shutil.rmtree(existing[m])
+        def refresh_derived(stage: str, build, fp: str, full_fp: str) -> None:
+            # a stage enabled after the original run() has no months to
+            # swap: a partial publish under the full fingerprint would hide
+            # every other month from run(), so build the whole stage
+            if self._stage_exists(stage):
+                self._refresh_stage(stage, build(months), months, fp)
+            else:
+                self._write_stage(stage, build(None), full_fp)
+            replaced[stage] = -1  # partition-scoped; rows in the ledger
 
+        prev_recomputed: DataFrame | None = None
         for tier in self.tiers:
             stage = f"rollup_{tier}"
-            recomputed = (
-                rollup_raw(affected_seq)
-                if tier == "raw"
-                else rollup_next(prev_recomputed, tier)
-            )
-            t0 = time.time()
             # the recomputed plan is consumed by the count, the write, and
             # (plain path) the distinct-months probe — persist once so the
             # aggregation DAG runs once, not three times
-            recomputed = recomputed.persist()
-            n_new = recomputed.count()
-            if self._is_snapshot_stage(stage):
-                st = self._store(stage)
-                st.refresh_months(recomputed, months)
-                snap_extra = {"snapshot_id": st.current_snapshot()}
-            else:
-                _overwrite_months(recomputed, stage)
-                snap_extra = {}
-            recomputed.unpersist()
-            # manifest append returns the month-scoped row total — no
-            # whole-table count on a month-scoped refresh
-            rows_out, _ = self._append_manifest(stage, "REFRESH", months)
-            self._append_ledger(
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "rows_in": n_new,
-                    "rows_out": rows_out,
-                    "n_files": None,
-                    "started_at": t0,
-                    "finished_at": time.time(),
-                    "status": "REFRESH",
-                    "fingerprint": prev_fp,
-                    "months": months,
-                    **snap_extra,
-                }
+            recomputed = _rollup(tier, affected_seq, prev_recomputed).persist()
+            replaced[stage] = recomputed.count()
+            self._refresh_stage(
+                stage, recomputed, months, prev_fp, rows_in=replaced[stage]
             )
-            replaced[stage] = n_new
+            recomputed.unpersist()
 
             if tier in self.hist_tiers:
-                from rtsa_spark.operators.rollup import (
-                    merge_token_histograms,
-                    token_histogram,
+                refresh_derived(
+                    f"hist_{tier}",
+                    lambda ms: self._hist(
+                        tier, sequences if ms is None else affected_seq, ms
+                    ),
+                    truthful_fp,
+                    seq_fp,
                 )
-
-                hstage = f"hist_{tier}"
-                hpath = self._stage_path(hstage)
-                # mirror run()'s construction exactly: first hist tier from
-                # raw tokens with top_k; coarser hist tiers cascade by
-                # merging the (already refreshed) finer tier's month rows —
-                # a direct rebuild would change top-k truncation semantics
-                # for refreshed months only
-                finer = next(
-                    (f"hist_{t}" for t in reversed(self.tiers[: self.tiers.index(tier)])
-                     if t in self.hist_tiers),
-                    None,
-                )
-                if not os.path.exists(hpath):
-                    # hist enabled after the original run(): a partial
-                    # publish under seq_fp would hide every other month from
-                    # run() — build the whole stage instead (same fallback
-                    # as the encoded stage below).
-                    if finer and os.path.exists(self._stage_path(finer)):
-                        hist = merge_token_histograms(self._read_stage(finer), tier)
-                    else:
-                        hist = token_histogram(
-                            sequences, tier, top_k=self.hist_top_k
-                        )
-                    self._write_stage(hstage, hist, seq_fp)
-                else:
-                    t_h = time.time()
-                    if finer and os.path.exists(self._stage_path(finer)):
-                        finer_months = (
-                            self.spark.read.parquet(self._stage_path(finer))
-                            .where(in_months)
-                            .drop(P_MONTH)
-                        )
-                        hist = merge_token_histograms(finer_months, tier)
-                    else:
-                        hist = token_histogram(
-                            affected_seq, tier, top_k=self.hist_top_k
-                        )
-                    _overwrite_months(hist, hstage)
-                    h_rows, _ = self._append_manifest(hstage, "REFRESH", months)
-                    self._append_ledger(
-                        {
-                            "run_id": self.run_id,
-                            "stage": hstage,
-                            "rows_in": None,
-                            "rows_out": h_rows,
-                            "n_files": None,
-                            "started_at": t_h,
-                            "finished_at": time.time(),
-                            "status": "REFRESH",
-                            "fingerprint": truthful_fp,
-                            "months": months,
-                        }
-                    )
-                replaced[hstage] = -1  # partition-scoped; rows tracked above
-
             tier_df = self._read_stage(stage)
             tier_fp = content_fingerprint(tier_df)
             if tier in self.gapfill_tiers:
-                gstage = f"gapfilled_{tier}"
-                self._write_stage(gstage, gapfill_linear(tier_df, tier), tier_fp)
-                replaced[gstage] = 0
+                self._write_stage(
+                    f"gapfilled_{tier}", gapfill_linear(tier_df, tier), tier_fp
+                )
+                replaced[f"gapfilled_{tier}"] = 0
             if tier in self.encode_tiers:
                 # blocks are month-scoped by construction, so the encoded
-                # stage refreshes partition-scoped like the tiers: re-encode
-                # only the affected months' tier rows and swap those dirs.
-                # If the stage dir doesn't exist (encoding enabled after the
-                # original run()), a partial publish under the full-tier
-                # fingerprint would permanently hide every other month from
-                # run() — build the whole stage instead.
-                estage = f"encoded_{tier}"
-                if not self._stage_exists(estage):
-                    self._write_stage(
-                        estage,
-                        encode_tier(tier_df, value_col=self.encode_value_col),
-                        tier_fp,
-                    )
-                else:
-                    t1 = time.time()
-                    month_blocks = encode_tier(
-                        self._read_stage_months(stage, months),
+                # stage refreshes partition-scoped like the tiers
+                refresh_derived(
+                    f"encoded_{tier}",
+                    lambda ms: encode_tier(
+                        tier_df if ms is None else self._read_stage_months(stage, ms),
                         value_col=self.encode_value_col,
-                    )
-                    if self._is_snapshot_stage(estage):
-                        self._store(estage).refresh_months(month_blocks, months)
-                    else:
-                        _overwrite_months(
-                            month_blocks, estage, ts_col="block_day"
-                        )
-                    e_rows, _ = self._append_manifest(estage, "REFRESH", months)
-                    self._append_ledger(
-                        {
-                            "run_id": self.run_id,
-                            "stage": estage,
-                            "rows_in": None,
-                            "rows_out": e_rows,
-                            "n_files": None,
-                            "started_at": t1,
-                            "finished_at": time.time(),
-                            "status": "REFRESH",
-                            "fingerprint": tier_fp,
-                            "months": months,
-                        }
-                    )
-                replaced[estage] = -1  # partition-scoped; rows tracked above
+                    ),
+                    tier_fp,
+                    tier_fp,
+                )
             if tier in self.metrics_tiers:
-                mstage = f"metrics_{tier}"
                 src = f"gapfilled_{tier}" if tier in self.gapfill_tiers else stage
                 mdf = self._read_stage(src)
                 self._write_stage(
-                    mstage, compute_metrics(mdf, tier), content_fingerprint(mdf)
+                    f"metrics_{tier}",
+                    compute_metrics(mdf, tier),
+                    content_fingerprint(mdf),
                 )
-                replaced[mstage] = 0
+                replaced[f"metrics_{tier}"] = 0
 
             prev_recomputed = self._read_stage_months(stage, months)
             prev_fp = tier_fp
-        # Update ONLY the refreshed months' entries in the published month
-        # map (not the whole new map): if the caller named a subset of the
-        # months that really changed, the others keep their old published
-        # fingerprint and detect_changed_months still flags them later.
-        published = self._read_input_months() or {}
-        for m in months:
-            published.pop(m, None)
-        published.update(
-            {m: fp for m, fp in seq_months.items() if m in set(months)}
-        )
-        self._write_input_months(published)
+        self._write_input_months(month_map)
         return replaced
 
     # ------------------------------------------------- file maintenance
@@ -1152,9 +1092,7 @@ class TierPipeline:
             if want is not None and m not in want:
                 continue
             df = self.spark.read.parquet(mpath)
-            ts_col = "bucket_start" if "bucket_start" in df.columns else (
-                "block_day" if "block_day" in df.columns else None
-            )
+            ts_col = _time_col(df)
             if ts_col is None:
                 raise ValueError(f"stage {stage!r} has no time column")
             plan = plan_compaction(file_stats(df, ts_col), target_rows)

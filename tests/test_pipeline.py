@@ -43,9 +43,11 @@ def test_pipeline_end_to_end_and_resume(spark, tiny_sequences, tmp_path):
     raw_rows = [r for r in ledger if r["stage"] == "rollup_raw" and r["status"] == "SUCCESS"]
     assert len(raw_rows) == 1
 
-    # second full re-run is a complete no-op
+    # second full re-run is a complete no-op, and fail_after still fires
+    # on a skipped stage of any kind (metrics here)
     before = len(p2._ledger())
-    p2.run(tiny_sequences)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        p2.run(tiny_sequences, fail_after="metrics_daily")
     assert len(p2._ledger()) == before
 
 

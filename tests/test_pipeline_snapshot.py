@@ -329,6 +329,11 @@ def test_encoded_stage_snapshot_backed(spark, seqs, tmp_path):
     corrected = seqs.withColumn("n_tok", F.col("n_tok") + 1)
     pipe.refresh_months(corrected, ["2024-02"])
     assert est.current_snapshot() == 2
+    (row,) = [
+        r for r in pipe._ledger()
+        if r["stage"] == "encoded_hourly" and r["status"] == "REFRESH"
+    ]
+    assert row["snapshot_id"] == est.current_snapshot()
     # history intact; version diff scoped to the refreshed month
     assert pipe.read_stage("encoded_hourly", asof=1).count() == enc1_rows
     before, after = est.months(asof=1), est.months(asof=2)

@@ -457,10 +457,15 @@ def test_refresh_changed_publishes_added_month(spark, tiny_sequences, tmp_path):
     assert p.refresh_changed(extended) == {}
 
 
-def test_sync_picks_cheapest_correct_action(spark, tiny_sequences, tmp_path):
+def test_sync_picks_cheapest_correct_action(
+    spark, tiny_sequences, tmp_path, monkeypatch
+):
     """sync(): full run on a fresh base, month-scoped refresh on a
     corrected input, no-op on an unchanged one — and the result always
-    equals a from-scratch run on the same input."""
+    equals a from-scratch run on the same input.  A refresh-mode sync
+    scans the input's month map once, for detection and refresh alike."""
+    import rtsa_spark.pipeline as pipeline_mod
+
     base = str(tmp_path / "sync")
     p = TierPipeline(spark, base, gapfill_tiers=(), metrics_tiers=())
 
@@ -474,8 +479,17 @@ def test_sync_picks_cheapest_correct_action(spark, tiny_sequences, tmp_path):
     corrected = tiny_sequences.withColumn(
         "n_tok", F.when(feb, F.col("n_tok") * 2).otherwise(F.col("n_tok"))
     )
-    r3 = p.sync(corrected)
+    scans = []
+    real = pipeline_mod.month_fingerprints
+    with monkeypatch.context() as mp:
+        mp.setattr(
+            pipeline_mod,
+            "month_fingerprints",
+            lambda *a, **kw: scans.append(1) or real(*a, **kw),
+        )
+        r3 = p.sync(corrected)
     assert r3["mode"] == "refresh" and r3["replaced"]["rollup_raw"] > 0
+    assert len(scans) == 1
 
     truth = str(tmp_path / "sync_truth")
     TierPipeline(spark, truth, gapfill_tiers=(), metrics_tiers=()).run(corrected)
@@ -496,7 +510,9 @@ def test_sync_picks_cheapest_correct_action(spark, tiny_sequences, tmp_path):
 def test_empty_input_rails(spark, tiny_sequences, tmp_path):
     """An all-empty input must never wipe published tiers: run(), sync(),
     refresh_months() and refresh_changed() all refuse loudly, the table
-    survives, and partial-month deletions (rows elsewhere) keep working."""
+    survives, and partial-month deletions (rows elsewhere) keep working.
+    refresh_months() also refuses an empty or malformed month list before
+    any write or ledger row."""
     import pytest
 
     base = str(tmp_path / "rails")
@@ -515,6 +531,13 @@ def test_empty_input_rails(spark, tiny_sequences, tmp_path):
     ):
         with pytest.raises(ValueError, match="empty"):
             fn()
+    ledger = len(p._ledger())
+    manifest = os.path.getsize(p._partition_ledger_path)
+    for bad in ([], ["2024-3"], ["2024-13"], "2024-03", [202403]):
+        with pytest.raises(ValueError, match="YYYY-MM"):
+            p.refresh_months(tiny_sequences, bad)
+    assert len(p._ledger()) == ledger
+    assert os.path.getsize(p._partition_ledger_path) == manifest
     assert p.read_stage("rollup_daily").count() == rows  # untouched
 
     # a NON-empty correction naming every published month with no
