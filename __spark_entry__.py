@@ -19,6 +19,7 @@ The Spark side goes through the engine's public operators
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +85,54 @@ def _derived_sequences(
             F.lit(SEQ_EPOCH_S) + F.pmod(h, F.lit(SEQ_HORIZON_S))
         ).alias("ts"),
     )
+
+
+def _sequence_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived sequences cast to the stream reader's
+    ``SEQUENCES_SCHEMA`` (doc_id string, empty int token arrays, int
+    n_tok). The cast is load-bearing: a stateful operator reads every
+    column, so relying on pruning to dodge a schema mismatch is a trap."""
+    return _derived_sequences(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.expr("CAST(array() AS array<int>)").alias("tokens"),
+        F.col("n_tok").cast("int").alias("n_tok"),
+        "source",
+        "ts",
+    )
+
+
+def _doc_words(spark: SparkSession, sf_dir: str, bucket) -> DataFrame:
+    """(source, <bucket>, word): the spread derived sequences joined to
+    their document text and exploded to one row per word — the token
+    stream of the sketch queries. ``bucket`` is the caller's aliased
+    time-bucket column over ``ts``."""
+    seq = _derived_sequences(spark, sf_dir, spread=True).drop("n_tok")
+    txt = _documents(spark, sf_dir).select("doc_id", "text")
+    return seq.join(txt, "doc_id").select(
+        "source", bucket, F.explode(F.split("text", " ")).alias("word")
+    )
+
+
+@contextmanager
+def _scratch(prefix: str):
+    """A fresh temp dir for queries that publish, snapshot or stream
+    through disk; removed on exit, so a result must be :func:`_detach`-ed
+    before the block ends."""
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _detach(df: DataFrame) -> DataFrame:
+    """``df`` collected into a driver-side frame with the same schema, so
+    it outlives the scratch dir it reads. Plain rows, no Arrow: the
+    driver harness runs Arrow-less."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
 SQL_SEQ_CTE = f"""
@@ -1756,17 +1805,11 @@ def q_pipeline_publish_audit(spark, sf_dir):
     bucket counts, token totals (identical across tiers by cascade
     exactness), and daily bucket bounds. The oracle recomputes all of it
     straight from the derived sequences, so a wrong write, a lossy
-    read-back schema, or a broken cascade all hash-mismatch. Results are
-    collected before the temp dir is removed (plain int tuples — the
-    driver harness runs Arrow-less)."""
-    import shutil
-    import tempfile
-
+    read-back schema, or a broken cascade all hash-mismatch."""
     from rtsa_spark.pipeline import TierPipeline
 
     seq = _derived_sequences(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="rtsa_publish_audit_")
-    try:
+    with _scratch("rtsa_publish_audit_") as base:
         tp = TierPipeline(
             spark, base, tiers=["raw", "hourly", "daily", "monthly"],
             gapfill_tiers=(), metrics_tiers=(), hist_tiers=(),
@@ -1794,8 +1837,7 @@ def q_pipeline_publish_audit(spark, sf_dir):
             .join(tier_agg("rollup_daily", "daily"), "source")
             .join(tier_agg("rollup_monthly", "monthly"), "source")
         )
-        cols = joined.columns
-        rows = [tuple(r[c] for c in cols) for r in joined.collect()]
+        out = _detach(joined)
         # per-partition manifest reconciliation: total manifest rows must
         # equal the sum of all tier row counts, and the manifest must hold
         # one row per (stage, month) partition
@@ -1809,13 +1851,7 @@ def q_pipeline_publish_audit(spark, sf_dir):
         )
         manifest_rows_total = int(man["mr"])
         manifest_partitions = int(man["mp"])
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     n_published = sum(1 for k in paths if k.startswith("rollup_"))
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    out = spark.createDataFrame(rows, schema)
     return (
         out.withColumn(
             "stages_published", F.lit(int(n_published)).cast("bigint")
@@ -1864,9 +1900,6 @@ def q_pruned_range_read(spark, sf_dir):
     same half-open ``[start, end)`` daily-bucket window straight from the
     derived sequences, so a pruning bug that drops or leaks a boundary
     bucket, a source, or a whole partition hash-mismatches."""
-    import shutil
-    import tempfile
-
     from rtsa_spark.pipeline import TierPipeline
 
     seq = _derived_sequences(spark, sf_dir)
@@ -1878,8 +1911,7 @@ def q_pruned_range_read(spark, sf_dir):
         .limit(2)
         .collect()
     ]
-    base = tempfile.mkdtemp(prefix="rtsa_pruned_read_")
-    try:
+    with _scratch("rtsa_pruned_read_") as base:
         tp = TierPipeline(
             spark, base, tiers=["raw", "hourly", "daily"],
             gapfill_tiers=(), metrics_tiers=(), hist_tiers=(),
@@ -1904,14 +1936,7 @@ def q_pruned_range_read(spark, sf_dir):
                 .alias("last_s"),
             )
         )
-        cols = got.columns
-        rows = [tuple(r[c] for c in cols) for r in got.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema)
+        return _detach(got)
 
 
 SQL_PRUNED_RANGE_READ = f"""
@@ -2151,15 +2176,11 @@ def q_pipeline_encoded_audit(spark, sf_dir):
     is reconciled globally: manifest row total == block rows, manifest
     entries == month partitions. A wrong write, a lossy decode, or a
     missing manifest row all hash-mismatch."""
-    import shutil
-    import tempfile
-
     from rtsa_spark.operators.encode import decode_blocks
     from rtsa_spark.pipeline import TierPipeline
 
     seq = _derived_sequences(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="rtsa_encoded_audit_")
-    try:
+    with _scratch("rtsa_encoded_audit_") as base:
         tp = TierPipeline(
             spark, base, tiers=["raw", "hourly"],
             gapfill_tiers=(), metrics_tiers=(), hist_tiers=(),
@@ -2181,8 +2202,7 @@ def q_pipeline_encoded_audit(spark, sf_dir):
                 "source",
             )
         )
-        cols = per_src.columns
-        rows = [tuple(r[c] for c in cols) for r in per_src.collect()]
+        out = _detach(per_src)
         man = (
             tp.partition_lineage()
             .where(F.col("stage") == "encoded_hourly")
@@ -2190,12 +2210,6 @@ def q_pipeline_encoded_audit(spark, sf_dir):
             .first()
         )
         mr, mp = int(man["mr"]), int(man["mp"])
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    out = spark.createDataFrame(rows, schema)
     return (
         out.withColumn("enc_manifest_rows", F.lit(mr).cast("bigint"))
         .withColumn("enc_manifest_partitions", F.lit(mp).cast("bigint"))
@@ -2226,19 +2240,13 @@ def q_snapshot_time_travel(spark, sf_dir):
     per-source bucket count and token total arithmetically from the
     sequences CTE, so a refresh that leaks outside its months, a read
     that resurrects a deleted month, a rollback that moves data, or any
-    time-travel read over the wrong version dirs all hash-mismatch.
-    Results are collected before the temp dir is removed (plain int
-    tuples — the driver harness runs Arrow-less)."""
-    import shutil
-    import tempfile
-
+    time-travel read over the wrong version dirs all hash-mismatch."""
     from rtsa_spark.operators.rollup import rollup_next, rollup_raw
     from rtsa_spark.snapshot import SnapshotStore
 
     hourly = rollup_next(rollup_raw(_derived_sequences(spark, sf_dir)), "hourly")
     feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
-    base = tempfile.mkdtemp(prefix="rtsa_snapshot_audit_")
-    try:
+    with _scratch("rtsa_snapshot_audit_") as base:
         st = SnapshotStore(spark, base)
         st.publish(hourly)                                          # snap 1
         st.refresh_months(
@@ -2272,17 +2280,9 @@ def q_snapshot_time_travel(spark, sf_dir):
                 if c != "source"
             ],
         )
-        cols = per_snap.columns
-        rows = [tuple(r[c] for c in cols) for r in per_snap.collect()]
+        out = _detach(per_snap)
         n_snapshots = int(st.current_snapshot())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema).withColumn(
-        "n_snapshots", F.lit(n_snapshots).cast("bigint")
-    )
+    return out.withColumn("n_snapshots", F.lit(n_snapshots).cast("bigint"))
 
 
 SQL_SNAPSHOT_TIME_TRAVEL = f"""
@@ -2315,18 +2315,13 @@ def q_snapshot_changelog(spark, sf_dir):
     as pure DELETEs, the SKIP-LEVEL diff 1→3 as exactly the original
     February rows deleted (the intermediate correction cancels), and
     the rewrite as an EMPTY changelog.  The oracle recomputes every
-    count/token total arithmetically from the sequences CTE; collected
-    to plain int tuples before the temp dir is removed."""
-    import shutil
-    import tempfile
-
+    count/token total arithmetically from the sequences CTE."""
     from rtsa_spark.operators.rollup import rollup_next, rollup_raw
     from rtsa_spark.snapshot import SnapshotStore
 
     hourly = rollup_next(rollup_raw(_derived_sequences(spark, sf_dir)), "hourly")
     feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
-    base = tempfile.mkdtemp(prefix="rtsa_changelog_audit_")
-    try:
+    with _scratch("rtsa_changelog_audit_") as base:
         st = SnapshotStore(spark, base)
         st.publish(hourly)                                          # snap 1
         st.refresh_months(
@@ -2364,16 +2359,8 @@ def q_snapshot_changelog(spark, sf_dir):
             ],
         )
         rw_changes = int(st.read_changes(3, 4).count())
-        cols = per_src.columns
-        rows = [tuple(r[c] for c in cols) for r in per_src.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema).withColumn(
-        "rewrite_changes", F.lit(rw_changes).cast("bigint")
-    )
+        out = _detach(per_src)
+    return out.withColumn("rewrite_changes", F.lit(rw_changes).cast("bigint"))
 
 
 SQL_SNAPSHOT_CHANGELOG = f"""
@@ -2412,18 +2399,13 @@ def q_snapshot_wap(spark, sf_dir):
     per-source bucket counts, token totals and quality sums of all three
     states arithmetically from the sequences CTE, so a wrong branch
     parent, a fast-forward that copies the wrong mapping, or null-fill
-    errors on the evolved read all hash-mismatch.  Collected to plain
-    int tuples before the temp dir is removed."""
-    import shutil
-    import tempfile
-
+    errors on the evolved read all hash-mismatch."""
     from rtsa_spark.operators.rollup import rollup_next, rollup_raw
     from rtsa_spark.snapshot import SnapshotStore
 
     hourly = rollup_next(rollup_raw(_derived_sequences(spark, sf_dir)), "hourly")
     feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
-    base = tempfile.mkdtemp(prefix="rtsa_wap_audit_")
-    try:
+    with _scratch("rtsa_wap_audit_") as base:
         st = SnapshotStore(spark, base)
         st.publish(hourly)                                          # snap 1
         st.branch("audit")
@@ -2459,18 +2441,9 @@ def q_snapshot_wap(spark, sf_dir):
             F.sum(F.coalesce(F.col("quality"), F.lit(0)))
             .cast("bigint").alias("q_final"),
         )
-        out = a_main.join(a_stage, "source").join(a_final, "source")
-        cols = out.columns
-        rows = [tuple(r[c] for c in cols) for r in out.collect()]
+        out = _detach(a_main.join(a_stage, "source").join(a_final, "source"))
         n_snapshots = int(st.current_snapshot())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema).withColumn(
-        "n_snapshots", F.lit(n_snapshots).cast("bigint")
-    )
+    return out.withColumn("n_snapshots", F.lit(n_snapshots).cast("bigint"))
 
 
 SQL_SNAPSHOT_WAP = f"""
@@ -2508,11 +2481,7 @@ def q_snapshot_merge(spark, sf_dir):
     The oracle recomputes all three states per source arithmetically
     from the sequences CTE; a merge that drops unmatched head rows,
     leaks outside its months, folds instead of replacing (or vice
-    versa), or touches history all hash-mismatch.  Collected to plain
-    int tuples before the temp dir is removed."""
-    import shutil
-    import tempfile
-
+    versa), or touches history all hash-mismatch."""
     from rtsa_spark.operators.rollup import (
         merge_rollup,
         rollup_next,
@@ -2522,8 +2491,7 @@ def q_snapshot_merge(spark, sf_dir):
 
     hourly = rollup_next(rollup_raw(_derived_sequences(spark, sf_dir)), "hourly")
     feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
-    base = tempfile.mkdtemp(prefix="rtsa_merge_audit_")
-    try:
+    with _scratch("rtsa_merge_audit_") as base:
         st = SnapshotStore(spark, base)
         st.publish(hourly)                                          # snap 1
         corrected = hourly.where(feb).withColumn(
@@ -2556,14 +2524,7 @@ def q_snapshot_merge(spark, sf_dir):
                 if c != "source"
             ],
         )
-        cols = per_src.columns
-        rows = [tuple(r[c] for c in cols) for r in per_src.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema)
+        return _detach(per_src)
 
 
 SQL_SNAPSHOT_MERGE = f"""
@@ -2616,18 +2577,13 @@ def q_snapshot_delete(spark, sf_dir):
     wrong rows, leaks outside its months, or rewrites history
     hash-mismatches.  A no-match predicate commits nothing, so at an SF
     where src1 has no February buckets both states coincide on both
-    engines.  Collected to plain int tuples before the temp dir is
-    removed."""
-    import shutil
-    import tempfile
-
+    engines."""
     from rtsa_spark.operators.rollup import rollup_next, rollup_raw
     from rtsa_spark.snapshot import SnapshotStore
 
     hourly = rollup_next(rollup_raw(_derived_sequences(spark, sf_dir)), "hourly")
     feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
-    base = tempfile.mkdtemp(prefix="rtsa_delete_audit_")
-    try:
+    with _scratch("rtsa_delete_audit_") as base:
         st = SnapshotStore(spark, base)
         st.publish(hourly)                                          # snap 1
         sid = st.delete_where(feb & (F.col("source") == "src1"))    # snap 2
@@ -2652,14 +2608,7 @@ def q_snapshot_delete(spark, sf_dir):
                 if c != "source"
             ],
         )
-        cols = per_src.columns
-        rows = [tuple(r[c] for c in cols) for r in per_src.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema)
+        return _detach(per_src)
 
 
 SQL_SNAPSHOT_DELETE = f"""
@@ -2690,19 +2639,14 @@ def q_snapshot_sync_next(spark, sf_dir):
     by expect_versions.  The query returns the destination head's
     per-source day counts and totals, which the oracle recomputes
     arithmetically from the sequences CTE; a sync that misses affected
-    buckets, leaks unaffected ones, or folds stale data hash-mismatches.
-    Collected to plain int tuples before the temp dir is removed."""
-    import shutil
-    import tempfile
-
+    buckets, leaks unaffected ones, or folds stale data hash-mismatches."""
     from rtsa_spark.operators.rollup import rollup_next, rollup_raw
     from rtsa_spark.snapshot import SnapshotStore
     from rtsa_spark.sync import sync_next
 
     hourly = rollup_next(rollup_raw(_derived_sequences(spark, sf_dir)), "hourly")
     feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
-    base = tempfile.mkdtemp(prefix="rtsa_sync_audit_")
-    try:
+    with _scratch("rtsa_sync_audit_") as base:
         src = SnapshotStore(spark, base + "/src")
         dst = SnapshotStore(spark, base + "/dst")
         src.publish(hourly)
@@ -2728,14 +2672,7 @@ def q_snapshot_sync_next(spark, sf_dir):
             F.sum("n_seq").cast("bigint").alias("seq_total"),
             F.sum("n_tok_sum").cast("bigint").alias("tok_total"),
         )
-        cols = out.columns
-        rows = [tuple(r[c] for c in cols) for r in out.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    schema = "source string, " + ", ".join(
-        f"{c} bigint" for c in cols if c != "source"
-    )
-    return spark.createDataFrame(rows, schema)
+        return _detach(out)
 
 
 SQL_SNAPSHOT_SYNC_NEXT = f"""
@@ -3044,24 +2981,13 @@ def q_streaming_snapshot_parity(spark, sf_dir):
     must equal the batch hourly tier EXACTLY — DuckDB recomputes it from
     the seq CTE. No watermark, no sentinel: late rows merge into their
     bucket whenever they arrive. The data-commit count rides along
-    (exactly 4 — one snapshot checkpoint per micro-batch). Results are
-    collected before the temp dir is removed."""
-    import shutil
-    import tempfile
-
+    (exactly 4 — one snapshot checkpoint per micro-batch)."""
     from rtsa_spark.snapshot import SnapshotStore
     from rtsa_spark.streaming.rollup_stream import read_sequences_stream
     from rtsa_spark.streaming.snapshot_sink import stream_sequences_to_snapshot
 
-    work = tempfile.mkdtemp(prefix="rtsa_stream_snap_")
-    try:
-        seq = _derived_sequences(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.expr("CAST(array() AS array<int>)").alias("tokens"),
-            F.col("n_tok").cast("int").alias("n_tok"),
-            "source",
-            "ts",
-        )
+    with _scratch("rtsa_stream_snap_") as work:
+        seq = _sequence_table(spark, sf_dir)
         seq.repartition(4).write.mode("overwrite").parquet(f"{work}/in")
         store = SnapshotStore(spark, f"{work}/store")
         q = stream_sequences_to_snapshot(
@@ -3079,18 +3005,9 @@ def q_streaming_snapshot_parity(spark, sf_dir):
             F.col("n_tok_min").cast("bigint").alias("n_tok_min"),
             F.col("n_tok_max").cast("bigint").alias("n_tok_max"),
         )
-        cols = tier.columns
-        rows = [tuple(r[c] for c in cols) for r in tier.collect()]
+        out = _detach(tier)
         n_commits = len(store.data_commits())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    schema = (
-        "source string, bucket_start timestamp, n_seq bigint, "
-        "n_tok_sum bigint, n_tok_min bigint, n_tok_max bigint"
-    )
-    return spark.createDataFrame(rows, schema).withColumn(
-        "n_commits", F.lit(n_commits).cast("bigint")
-    )
+    return out.withColumn("n_commits", F.lit(n_commits).cast("bigint"))
 
 
 SQL_STREAMING_SNAPSHOT_PARITY = f"""
@@ -3114,44 +3031,37 @@ def q_streaming_batch_parity(spark, sf_dir):
     recomputes the same minute tier from the derived rows. A sentinel row
     2099-01-01 pushes the watermark past every real bucket so append mode
     emits them all (same pattern as tests/test_streaming.py)."""
-    import tempfile
-
     from rtsa_spark.streaming.rollup_stream import (
         read_sequences_stream,
         run_stream_to_parquet,
         streaming_rollup_raw,
     )
 
-    work = tempfile.mkdtemp(prefix="rtsa_stream_parity_")
-    seq = _derived_sequences(spark, sf_dir).select(
-        # cast to match SEQUENCES_SCHEMA exactly — the windowed rollup
-        # prunes doc_id away, but relying on pruning to dodge a schema
-        # mismatch is a trap (the stateful query hit it)
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr("CAST(array() AS array<int>)").alias("tokens"),
-        F.col("n_tok").cast("int").alias("n_tok"),
-        "source",
-        "ts",
-    )
+    seq = _sequence_table(spark, sf_dir)
     sentinel = seq.limit(1).withColumn(
         "ts", F.lit("2099-01-01 00:00:00").cast("timestamp")
     )
-    seq.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
-        f"{work}/in"
-    )
-    stream = read_sequences_stream(spark, f"{work}/in", max_files_per_trigger=None)
-    rolled = streaming_rollup_raw(stream, watermark="5 minutes")
-    q = run_stream_to_parquet(rolled, f"{work}/out", f"{work}/ckpt")
-    q.awaitTermination(300)
-    out = spark.read.parquet(f"{work}/out")
-    return out.select(
-        "source",
-        "bucket_start",
-        F.col("n_seq").cast("bigint").alias("n_seq"),
-        F.col("n_tok_sum").cast("bigint").alias("n_tok_sum"),
-        F.col("n_tok_min").cast("bigint").alias("n_tok_min"),
-        F.col("n_tok_max").cast("bigint").alias("n_tok_max"),
-    )
+    with _scratch("rtsa_stream_parity_") as work:
+        seq.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
+            f"{work}/in"
+        )
+        stream = read_sequences_stream(
+            spark, f"{work}/in", max_files_per_trigger=None
+        )
+        rolled = streaming_rollup_raw(stream, watermark="5 minutes")
+        q = run_stream_to_parquet(rolled, f"{work}/out", f"{work}/ckpt")
+        q.awaitTermination(300)
+        out = spark.read.parquet(f"{work}/out")
+        return _detach(
+            out.select(
+                "source",
+                "bucket_start",
+                F.col("n_seq").cast("bigint").alias("n_seq"),
+                F.col("n_tok_sum").cast("bigint").alias("n_tok_sum"),
+                F.col("n_tok_min").cast("bigint").alias("n_tok_min"),
+                F.col("n_tok_max").cast("bigint").alias("n_tok_max"),
+            )
+        )
 
 
 SQL_STREAMING_PARITY = f"""
@@ -3173,63 +3083,46 @@ def q_stateful_tracker(spark, sf_dir):
     max inter-event gap are all recomputed by DuckDB from the same rows
     (gaps via lag over the per-source ts order — the derived ts is
     whole-second, so second-quantized gaps are exact)."""
-    import tempfile
-
     from rtsa_spark.streaming.rollup_stream import SEQUENCES_SCHEMA
     from rtsa_spark.streaming.stateful import streaming_source_state
 
-    work = tempfile.mkdtemp(prefix="rtsa_stateful_")
-    seq = _derived_sequences(spark, sf_dir).select(
-        # SEQUENCES_SCHEMA declares doc_id string; the stateful operator
-        # reads every column (no pruning), so the cast is load-bearing
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr("CAST(array() AS array<int>)").alias("tokens"),
-        F.col("n_tok").cast("int").alias("n_tok"),
-        "source",
-        "ts",
-    )
+    seq = _sequence_table(spark, sf_dir)
     bounds = ("2024-02-01", "2024-03-15")
     slices = [
         seq.where(F.col("ts") < bounds[0]),
         seq.where((F.col("ts") >= bounds[0]) & (F.col("ts") < bounds[1])),
         seq.where(F.col("ts") >= bounds[1]),
     ]
-    # sequential writes -> increasing mod times -> the file source replays
-    # them oldest-first (one micro-batch each via maxFilesPerTrigger=1)
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.mode("overwrite").parquet(f"{work}/in/f{i}")
-    stream = (
-        spark.readStream.schema(SEQUENCES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(f"{work}/in/f*")
-    )
     updates: list = []
 
     def sink(df, _epoch):
         updates.extend(df.collect())
 
-    q = (
-        streaming_source_state(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .start()
-    )
-    q.awaitTermination(300)
+    with _scratch("rtsa_stateful_") as work:
+        # sequential writes -> increasing mod times -> the file source
+        # replays them oldest-first (one micro-batch each via
+        # maxFilesPerTrigger=1)
+        for i, sl in enumerate(slices):
+            sl.coalesce(1).write.mode("overwrite").parquet(f"{work}/in/f{i}")
+        stream = (
+            spark.readStream.schema(SEQUENCES_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(f"{work}/in/f*")
+        )
+        tracked = streaming_source_state(stream)
+        q = (
+            tracked.writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .start()
+        )
+        q.awaitTermination(300)
     final: dict = {}
     for r in updates:  # last update per source wins
         final[r["source"]] = r
-    rows = [
-        (r["source"], r["n_seq"], r["n_tok_sum"], r["last_ts"], r["max_gap_s"])
-        for r in final.values()
-    ]
-    return spark.createDataFrame(
-        rows,
-        "source string, n_seq bigint, n_tok_sum bigint, last_ts timestamp,"
-        " max_gap_s bigint",
-    )
+    return spark.createDataFrame(list(final.values()), tracked.schema)
 
 
 SQL_STATEFUL_TRACKER = f"""
@@ -3257,39 +3150,35 @@ def q_streaming_sessions(spark, sf_dir):
     DuckDB replays the islands construction with the engine's INCLUSIVE
     boundary (delta > gap starts a new session — pinned by pytest;
     session_end = last event + gap)."""
-    import tempfile
-
     from rtsa_spark.streaming.rollup_stream import (
         read_sequences_stream,
         run_stream_to_parquet,
         streaming_sessions,
     )
 
-    work = tempfile.mkdtemp(prefix="rtsa_stream_sess_")
-    seq = _derived_sequences(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr("CAST(array() AS array<int>)").alias("tokens"),
-        F.col("n_tok").cast("int").alias("n_tok"),
-        "source",
-        "ts",
-    )
+    seq = _sequence_table(spark, sf_dir)
     sentinel = seq.limit(1).withColumn(
         "ts", F.lit("2099-01-01 00:00:00").cast("timestamp")
     )
-    seq.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
-        f"{work}/in"
-    )
-    stream = read_sequences_stream(spark, f"{work}/in", max_files_per_trigger=None)
-    sess = streaming_sessions(stream, gap_s=604800, watermark="5 minutes")
-    q = run_stream_to_parquet(sess, f"{work}/out", f"{work}/ckpt")
-    q.awaitTermination(300)
-    return spark.read.parquet(f"{work}/out").select(
-        "source",
-        "session_start",
-        "session_end",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.col("v_sum").cast("bigint").alias("v_sum"),
-    )
+    with _scratch("rtsa_stream_sess_") as work:
+        seq.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
+            f"{work}/in"
+        )
+        stream = read_sequences_stream(
+            spark, f"{work}/in", max_files_per_trigger=None
+        )
+        sess = streaming_sessions(stream, gap_s=604800, watermark="5 minutes")
+        q = run_stream_to_parquet(sess, f"{work}/out", f"{work}/ckpt")
+        q.awaitTermination(300)
+        return _detach(
+            spark.read.parquet(f"{work}/out").select(
+                "source",
+                "session_start",
+                "session_end",
+                F.col("n_events").cast("bigint").alias("n_events"),
+                F.col("v_sum").cast("bigint").alias("v_sum"),
+            )
+        )
 
 
 SQL_STREAMING_SESSIONS = f"""
@@ -5160,23 +5049,9 @@ def q_cm_frequency_ladder(spark, sf_dir):
         _h48,
     )
 
-    seq = _derived_sequences(spark, sf_dir, spread=True).drop("n_tok")
-    txt = _documents(spark, sf_dir).select("doc_id", "text")
-    tok = (
-        seq.join(txt, "doc_id")
-        .select(
-            "source",
-            F.date_trunc("day", "ts").alias("d"),
-            F.explode(F.split("text", " ")).alias("word"),
-        )
-    )
-    # ONE counted token table feeds the sketch build, the probe set and
-    # the exact twin (r6): the join+explode ran once per consumer before.
-    # NO repartition barrier here, unlike the mg twin: cm has a THIRD
-    # consumer (probes) that prunes to one column and then broadcasts —
-    # funneling it through a full-width shared exchange measured slower
-    # (3.57 s) than letting it recompute from the narrow join (2.8-3.0 s
-    # at sf1); the spread seq side already parallelizes the recompute.
+    tok = _doc_words(spark, sf_dir, F.date_trunc("day", "ts").alias("d"))
+    # ONE counted token table feeds the sketch build and the exact twin
+    # (r6). No share() barrier, unlike the mg twin: see plans/share.py.
     wc = tok.groupBy("source", "d", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("wcnt")
     )
@@ -5190,6 +5065,7 @@ def q_cm_frequency_ladder(spark, sf_dir):
     # through the seq join (r6: one fewer join+explode consumer)
     from rtsa_spark.plans.spread import fan_out_scan
 
+    txt = _documents(spark, sf_dir).select("doc_id", "text")
     probes = (
         fan_out_scan(txt)
         .select(F.explode(F.split("text", " ")).alias("word"))
@@ -5383,30 +5259,14 @@ def q_mg_heavy_hitters(spark, sf_dir):
     undercount-only contract is visible in the data:
     w_lo <= exact_count <= w_lo + slack on every surviving token."""
     from rtsa_spark.operators.sketch import mg_bucket_sketch, mg_merge_buckets
+    from rtsa_spark.plans.share import share
 
-    seq = _derived_sequences(spark, sf_dir, spread=True).drop("n_tok")
-    txt = _documents(spark, sf_dir).select("doc_id", "text")
-    tok = (
-        seq.join(txt, "doc_id")
-        .select(
-            "source",
-            F.date_trunc("day", "ts").alias("d"),
-            F.explode(F.split("text", " ")).alias("word"),
-        )
-    )
+    tok = _doc_words(spark, sf_dir, F.date_trunc("day", "ts").alias("d"))
     # ONE counted token table feeds both the sketch and its exact twin
-    # (r6): the join+explode ran once per consumer before
-    wc = (
-        tok.groupBy("source", "d", "word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("wcnt"))
-        # materialization barrier: repartition on EVERY column forces a
-        # shared exchange no branch's pruning can perturb (a distinct
-        # would be partition-local over the groupBy's partitioning — no
-        # exchange, nothing to reuse), so the join+explode runs once for
-        # the sketch, probe and exact consumers (~15 CPU-s per avoided
-        # pass at sf1)
-        .repartition(
-            F.col("source"), F.col("d"), F.col("word"), F.col("wcnt")
+    # (r6); share() makes the join+explode run once for both
+    wc = share(
+        tok.groupBy("source", "d", "word").agg(
+            F.count(F.lit(1)).cast("bigint").alias("wcnt")
         )
     )
     daily = mg_bucket_sketch(
@@ -5491,15 +5351,8 @@ def q_certified_topk(spark, sf_dir):
     top-5. The oracle replays prune, merge, recount, and certificate."""
     from rtsa_spark.operators.sketch import mg_certified_topk
 
-    seq = _derived_sequences(spark, sf_dir, spread=True).drop("n_tok")
-    txt = _documents(spark, sf_dir).select("doc_id", "text")
-    tok = (
-        seq.join(txt, "doc_id")
-        .select(
-            "source",
-            F.date_trunc("day", "ts").alias("bucket"),
-            F.explode(F.split("text", " ")).alias("word"),
-        )
+    tok = _doc_words(
+        spark, sf_dir, F.date_trunc("day", "ts").alias("bucket")
     )
     fine = tok.groupBy("source", "bucket", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -5592,48 +5445,48 @@ def q_streaming_sketch_parity(spark, sf_dir):
     merge is EXACT, the state after the whole backlog must be cell-
     identical to a single direct build — so DuckDB simply rebuilds the
     sketch from all rows at once and answers the same probes."""
-    import tempfile
-
     from rtsa_spark.operators.sketch import _h48, cm_estimate
     from rtsa_spark.streaming.sketch_stream import (
         read_cm_state,
         streaming_cm_state,
     )
 
-    work = tempfile.mkdtemp(prefix="rtsa_sketch_state_")
     seq = _derived_sequences(spark, sf_dir).select(
         "source",
         F.date_trunc("day", "ts").alias("b"),
         (F.col("n_tok") % 97).cast("string").alias("item"),
     )
-    # 4 files -> 4 microbatches; the split keys on the row content so
-    # every batch touches several buckets (real interleaving, not one
-    # bucket per batch)
-    for i in range(4):
-        seq.where(_h48(F.concat_ws(":", "item", "b")) % 4 == i).coalesce(
-            1
-        ).write.mode("append").parquet(f"{work}/in")
-    stream = (
-        spark.readStream.schema("source string, b timestamp, item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/in")
+    probes = spark.range(0, 97, 5).select(
+        F.col("id").cast("string").alias("item")
     )
-    q = streaming_cm_state(
-        stream, f"{work}/state", f"{work}/ckpt", ["source"], "b", "item",
-        d_rows=3, w_cols=32,
-    )
-    assert q.awaitTermination(300), "sketch-state stream did not drain"
-    state = read_cm_state(spark, f"{work}/state")
-    probes = spark.createDataFrame(
-        [(str(v),) for v in range(0, 97, 5)], "item string"
-    )
-    est = cm_estimate(state, probes, d_rows=3, w_cols=32)
-    return est.select(
-        "source",
-        F.col("bucket").alias("day"),
-        F.col("item").alias("token"),
-        "est_count",
-    )
+    with _scratch("rtsa_sketch_state_") as work:
+        # 4 files -> 4 microbatches; the split keys on the row content so
+        # every batch touches several buckets (real interleaving, not one
+        # bucket per batch)
+        for i in range(4):
+            seq.where(_h48(F.concat_ws(":", "item", "b")) % 4 == i).coalesce(
+                1
+            ).write.mode("append").parquet(f"{work}/in")
+        stream = (
+            spark.readStream.schema("source string, b timestamp, item string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{work}/in")
+        )
+        q = streaming_cm_state(
+            stream, f"{work}/state", f"{work}/ckpt", ["source"], "b", "item",
+            d_rows=3, w_cols=32,
+        )
+        assert q.awaitTermination(300), "sketch-state stream did not drain"
+        state = read_cm_state(spark, f"{work}/state")
+        est = cm_estimate(state, probes, d_rows=3, w_cols=32)
+        return _detach(
+            est.select(
+                "source",
+                F.col("bucket").alias("day"),
+                F.col("item").alias("token"),
+                "est_count",
+            )
+        )
 
 
 SQL_STREAMING_SKETCH_PARITY = f"""
@@ -5683,13 +5536,10 @@ def q_streaming_bloom_dedup(spark, sf_dir):
     false positives hit the exact verify join — more work, same answer.
     The ntile-3 batch assignment is test harness plumbing (how the
     backlog splits into files), replayed identically in SQL."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from rtsa_spark.streaming.sketch_stream import streaming_bloom_dedup
 
-    work = tempfile.mkdtemp(prefix="rtsa_bloom_dedup_")
     seq = _derived_sequences(spark, sf_dir).select("doc_id", "ts")
     txt = _documents(spark, sf_dir).select("doc_id", "text")
     orig = seq.join(txt, "doc_id")
@@ -5702,26 +5552,29 @@ def q_streaming_bloom_dedup(spark, sf_dir):
         "batch",
         F.ntile(3).over(Window.orderBy("ts", "doc_id")) - 1,
     )
-    for b in range(3):
-        allrows.where(F.col("batch") == b).drop("batch").coalesce(
-            1
-        ).write.mode("append").parquet(f"{work}/in")
-    stream = (
-        spark.readStream.schema("doc_id bigint, ts timestamp, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/in")
-    )
-    q = streaming_bloom_dedup(
-        stream, f"{work}/state", f"{work}/out", f"{work}/ckpt",
-        content_col="text", order_cols=["ts", "doc_id"],
-        m_bits=2048, k_hash=2,
-    )
-    assert q.awaitTermination(300), "bloom-dedup stream did not drain"
-    out = spark.read.parquet(f"{work}/out")
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("batch").cast("bigint").alias("kept_batch"),
-    )
+    with _scratch("rtsa_bloom_dedup_") as work:
+        for b in range(3):
+            allrows.where(F.col("batch") == b).drop("batch").coalesce(
+                1
+            ).write.mode("append").parquet(f"{work}/in")
+        stream = (
+            spark.readStream.schema("doc_id bigint, ts timestamp, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{work}/in")
+        )
+        q = streaming_bloom_dedup(
+            stream, f"{work}/state", f"{work}/out", f"{work}/ckpt",
+            content_col="text", order_cols=["ts", "doc_id"],
+            m_bits=2048, k_hash=2,
+        )
+        assert q.awaitTermination(300), "bloom-dedup stream did not drain"
+        out = spark.read.parquet(f"{work}/out")
+        return _detach(
+            out.select(
+                F.col("doc_id").cast("bigint").alias("doc_id"),
+                F.col("batch").cast("bigint").alias("kept_batch"),
+            )
+        )
 
 
 SQL_STREAMING_BLOOM_DEDUP = f"""
@@ -5759,15 +5612,8 @@ def q_trailing_heavy_hitters(spark, sf_dir):
     boundary counting is not portable for mid-day timestamps)."""
     from rtsa_spark.operators.sketch import mg_bucket_sketch, mg_trailing_topk
 
-    seq = _derived_sequences(spark, sf_dir, spread=True).drop("n_tok")
-    txt = _documents(spark, sf_dir).select("doc_id", "text")
-    tok = (
-        seq.join(txt, "doc_id")
-        .select(
-            "source",
-            F.expr("unix_timestamp(ts) div 86400").alias("d"),
-            F.explode(F.split("text", " ")).alias("word"),
-        )
+    tok = _doc_words(
+        spark, sf_dir, F.expr("unix_timestamp(ts) div 86400").alias("d")
     )
     daily = mg_bucket_sketch(tok, ["source"], "d", "word", k=8)
     trail = mg_trailing_topk(daily, ["source"], window_buckets=3, k=8)
@@ -5847,16 +5693,7 @@ def q_sample_ladder(spark, sf_dir):
         sample_merge_buckets,
     )
 
-    seq = _derived_sequences(spark, sf_dir, spread=True).drop("n_tok")
-    txt = _documents(spark, sf_dir).select("doc_id", "text")
-    tok = (
-        seq.join(txt, "doc_id")
-        .select(
-            "source",
-            F.date_trunc("day", "ts").alias("d"),
-            F.explode(F.split("text", " ")).alias("word"),
-        )
-    )
+    tok = _doc_words(spark, sf_dir, F.date_trunc("day", "ts").alias("d"))
     daily = sample_bucket_sketch(tok, ["source"], "d", "word", k=8)
     merged = sample_merge_buckets(daily, ["source"], F.lit("all"), k=5)
     return merged.select(
@@ -8044,11 +7881,8 @@ def q_streaming_dedup(spark, sf_dir):
     content (doc_id mod 37), return the surviving content set — which
     duplicate row arrives first is scheduler-dependent, the SET of
     surviving contents is not."""
-    import tempfile
-
     from rtsa_spark.streaming.rollup_stream import streaming_dedup
 
-    work = tempfile.mkdtemp(prefix="rtsa_stream_dedup_")
     seq = _derived_sequences(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(F.lit("c"), (F.col("doc_id") % 37).cast("string")).alias(
@@ -8056,24 +7890,25 @@ def q_streaming_dedup(spark, sf_dir):
         ),
         "ts",
     )
-    seq.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
-    stream = spark.readStream.schema(
-        "doc_id string, content string, ts timestamp"
-    ).parquet(f"{work}/in")
-    deduped = streaming_dedup(
-        stream, watermark="5 minutes", content_cols=["content"]
-    )
-    q = (
-        deduped.select("content_md5", "content")
-        .writeStream.format("parquet")
-        .option("path", f"{work}/out")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.read.parquet(f"{work}/out").distinct()
+    with _scratch("rtsa_stream_dedup_") as work:
+        seq.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
+        stream = spark.readStream.schema(
+            "doc_id string, content string, ts timestamp"
+        ).parquet(f"{work}/in")
+        deduped = streaming_dedup(
+            stream, watermark="5 minutes", content_cols=["content"]
+        )
+        q = (
+            deduped.select("content_md5", "content")
+            .writeStream.format("parquet")
+            .option("path", f"{work}/out")
+            .option("checkpointLocation", f"{work}/ckpt")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return _detach(spark.read.parquet(f"{work}/out").distinct())
 
 
 SQL_STREAMING_DEDUP = f"""
@@ -9349,7 +9184,7 @@ def q_hll_ladder(spark, sf_dir):
         hll_bucket_sketch,
         hll_merge_buckets,
     )
-
+    from rtsa_spark.plans.share import share
     from rtsa_spark.plans.spread import fan_out_scan
 
     # narrow projection FIRST, then fan out (guide §2.3/§2.5): the
@@ -9360,15 +9195,10 @@ def q_hll_ladder(spark, sf_dir):
             "event_type", F.date_trunc("day", "ts").alias("d"), "user_id"
         )
     )
-    daily = hll_bucket_sketch(ev, ["event_type"], "d", "user_id", p=10)
-    # materialization barrier shared by the daily branch AND the monthly
-    # merge: a repartition keyed on EVERY output column forces an
-    # exchange (a distinct here would be satisfied by the sketch's
-    # existing (key, bucket) partitioning — partition-local, no exchange,
-    # nothing to reuse) that neither branch's column pruning can alter,
-    # so the whole events pass runs once. Partitioning choice itself is
-    # irrelevant downstream (both branches re-aggregate).
-    daily = daily.repartition(*[F.col(c) for c in daily.columns])
+    # share(): the daily branch AND the monthly merge read one events pass
+    daily = share(
+        hll_bucket_sketch(ev, ["event_type"], "d", "user_id", p=10)
+    )
     monthly = hll_merge_buckets(
         daily, ["event_type"], F.date_trunc("month", F.col("bucket")), p=10
     )

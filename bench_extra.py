@@ -1,6 +1,7 @@
 """Extra benchmarks (guide §1.4): isolate individual headline queries with
-the noop sink and report a per-job wall breakdown from the Spark status
-API, so optimization work targets the stage that actually burns the time.
+the noop sink and report a per-stage breakdown from Spark's in-process
+status store, so optimization work targets the stage that actually burns
+the time.
 
 NOT part of the driver contract — bench.py stays the frozen round metric.
 
@@ -11,8 +12,9 @@ count (default) replays the frozen bench.py methodology (the optimizer may
 prune subtrees a count never needs — that IS the round metric); noop forces
 every column of every row (guide §1.4) for full-computation isolation.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Writes BENCH/extra_<name>.json with per-rep walls + per-stage task-time
-breakdown of the final rep.
+Writes BENCH/extra_<name>.json with per-rep walls + the final rep's
+per-stage breakdown: executor CPU and run time, tasks, input records and
+shuffle read/write bytes.
 """
 
 from __future__ import annotations
@@ -31,42 +33,31 @@ def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def stage_breakdown(spark, since_ms: float):
-    """Executor-run-time per completed stage since `since_ms` (REST API)."""
-    import urllib.request
+def stage_breakdown(spark, group: str):
+    """Per-stage executor time, shuffle and input of the jobs run under
+    job group ``group``, read from the in-process status store (the UI
+    stays off)."""
+    from perfbench.status import StatusReader
 
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        ) as r:
-            stages = json.load(r)
-    except Exception as e:  # UI disabled or port busy
-        return [{"err": str(e)}]
+    reader = StatusReader(spark)
+    table = reader.stage_table()
+    tracker = spark.sparkContext.statusTracker()
     out = []
-    for s in stages:
-        sub = s.get("firstTaskLaunchedTime") or s.get("submissionTime")
-        comp = s.get("completionTime")
-        if not sub or not comp:
+    for sid in reader.stage_ids(reader.job_ids(group)):
+        s = table.get(sid)
+        if s is None or not s["tasks"]:  # skipped: its output was reused
             continue
-        # ISO8601 'yyyy-MM-ddTHH:mm:ss.SSSGMT'
-        from datetime import datetime
-
-        t0 = datetime.strptime(sub[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-        if t0 * 1000 < since_ms:
-            continue
-        t1 = datetime.strptime(comp[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
+        info = tracker.getStageInfo(sid)
         out.append(
             {
-                "stage": s["stageId"],
-                "name": s["name"].split("\n")[0][:80],
-                "wall_s": round(t1 - t0, 3),
-                "task_cpu_s": round(s.get("executorRunTime", 0) / 1000.0, 2),
-                "tasks": s.get("numCompleteTasks"),
-                "in_rec": s.get("inputRecords"),
-                "sh_r_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-                "sh_w_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
+                "stage": sid,
+                "name": info.name.split("\n")[0][:80] if info else "",
+                "task_cpu_s": round(s["task_cpu_s"], 2),
+                "task_run_s": round(s["task_run_s"], 2),
+                "tasks": int(s["tasks"]),
+                "input_records": int(s["input_records"]),
+                "shuffle_read_bytes": int(s["shuffle_read_bytes"]),
+                "shuffle_write_bytes": int(s["shuffle_write_bytes"]),
             }
         )
     out.sort(key=lambda d: -d["task_cpu_s"])
@@ -84,11 +75,9 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
-        app_name="bench_extra", cores=cores, shuffle_partitions=cores * 2,
-        # the per-stage breakdown reads the UI REST API (off in the
-        # bench session config)
-        extra_conf={"spark.ui.enabled": "true"},
+        app_name="bench_extra", cores=cores, shuffle_partitions=cores * 2
     )
+    sc = spark.sparkContext
     qs = E.queries()
     names = HEADLINE if name == "all" else [name]
 
@@ -102,16 +91,17 @@ def main() -> int:
         else:
             mk = lambda n=n: qs[n](spark, sf_dir)  # noqa: E731
         walls = []
-        spark.sparkContext.setJobDescription(f"extra:{n}")
         for rep in range(reps):
+            if rep == reps - 1:  # the breakdown covers the last rep only
+                sc.setJobGroup(f"extra:{n}", f"extra:{n}")
             t0 = time.time()
-            since_ms = t0 * 1000
             if mode == "noop":
                 noop(mk())
             else:
                 mk().count()
             walls.append(round(time.time() - t0, 3))
-        br = stage_breakdown(spark, since_ms)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        br = stage_breakdown(spark, f"extra:{n}")
         results[n] = {"walls": walls, "min": min(walls[1:] or walls),
                       "stages_last_rep": br}
         print(n, walls)

@@ -99,12 +99,8 @@ def bm25_topk(
             for i, t in enumerate(terms)
         ],
     ).where(F.col("dl") >= 1)
-    # NOTE: no materialization barrier between the stats aggregate and
-    # the scoring projection, deliberately — the duplicated narrow
-    # split+count pass is cheaper than the extra exchange a
-    # repartition-all-columns barrier costs (measured r6: bm25 1.5 s ->
-    # 2.0 s with the barrier at sf1; the barrier pattern only pays when
-    # the shared subtree is an expensive explode/hash pass)
+    # No share() barrier between the stats aggregate and the scoring
+    # projection, deliberately: see plans/share.py.
     # ONE single-row aggregate carries n_docs, len_total and every
     # term's df; the quarter-bit idf per term (shared shift, module
     # docstring) is then scalar arithmetic on that row.

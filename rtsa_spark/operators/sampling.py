@@ -367,6 +367,7 @@ def perplexity_partition(
     """
     if ref_mod < 1:
         raise ValueError(f"ref_mod must be >= 1, got {ref_mod}")
+    from rtsa_spark.plans.share import share
     from rtsa_spark.plans.spread import fan_out_scan
 
     df = fan_out_scan(df)  # token explode must not run on one scan task
@@ -388,7 +389,9 @@ def perplexity_partition(
     oov = total.select(
         F.length(F.bin(F.col("n_total"))).cast("bigint").alias("_oov_bits")
     )
-    scored = (
+    # share(): the tercile histogram and the final projection both read
+    # the scores, so the token explode + model join run once
+    scored = share(
         toks.join(model, "token", "left")
         .crossJoin(F.broadcast(oov))
         .groupBy("_id", "_by")
@@ -403,16 +406,6 @@ def perplexity_partition(
             "_by",
             "n_tok",
             F.expr("(1000000 * sum_bits) div n_tok").alias("mean_bits_e6"),
-        )
-        # materialization point shared by the tercile histogram and the
-        # final projection: repartition on EVERY output column forces an
-        # exchange (a distinct would be satisfied by the groupBy's
-        # (_id, _by) partitioning — partition-local, no exchange to
-        # reuse) that per-branch pruning cannot alter, so the token
-        # explode + model join run once for both consumers
-        .repartition(
-            F.col("_id"), F.col("_by"), F.col("n_tok"),
-            F.col("mean_bits_e6"),
         )
     )
     hist = scored.groupBy("_by", "mean_bits_e6").agg(

@@ -10,9 +10,13 @@ cover exactly the same names.
 from __future__ import annotations
 
 import ast
+import os
 import re
 
-ENTRY = "/root/repo/__spark_entry__.py"
+ENTRY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py",
+)
 
 
 def _dict_literal_keys(func_name: str) -> list[str]:
@@ -85,7 +89,7 @@ def test_parity_appendix_covers_every_query():
     PARITY row). Regenerate with tools/gen_parity_appendix.py."""
     import re as _re
 
-    text = open("/root/repo/PARITY.md").read()
+    text = open(os.path.join(os.path.dirname(ENTRY), "PARITY.md")).read()
     m = _re.search(
         r"BEGIN QUERY APPENDIX.*?END QUERY APPENDIX", text, _re.S
     )
@@ -104,3 +108,65 @@ def test_query_functions_unique():
     names = re.findall(r"^def (q_\w+)\(", src, re.M)
     dupes = sorted({n for n in names if names.count(n) > 1})
     assert not dupes, f"duplicate query functions shadow earlier ones: {dupes}"
+
+
+def _query_functions():
+    tree = ast.parse(open(ENTRY).read())
+    return [
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")
+    ]
+
+
+def test_scratch_dirs_only_through_harness():
+    """A q_* body that makes its own temp dir can leak it (six streaming
+    queries once left their input, checkpoints and output behind on every
+    run); ``_scratch`` is the one path, and ``_detach`` the one way a
+    result outlives it. A hand-written createDataFrame schema is a second
+    copy of the result's schema, free to drift from it: take it from the
+    frame (``df.schema``)."""
+    bad = []
+    for fn in _query_functions():
+        for n in ast.walk(fn):
+            if not isinstance(n, ast.Call):
+                continue
+            name = getattr(n.func, "attr", getattr(n.func, "id", None))
+            if name in ("mkdtemp", "rmtree"):
+                bad.append(f"{fn.name}: {name}")
+            elif name == "createDataFrame":
+                schema = n.args[1:] + [
+                    k.value for k in n.keywords if k.arg == "schema"
+                ]
+                if any(
+                    not (isinstance(a, ast.Attribute) and a.attr == "schema")
+                    for a in schema
+                ):
+                    bad.append(f"{fn.name}: hand-written createDataFrame schema")
+    assert not bad, bad
+
+
+def test_streaming_dedup_leaves_no_scratch_dir(spark):
+    import tempfile
+
+    import __spark_entry__ as E
+
+    sf = "/root/testdata/sf0.001"
+    prefix = "rtsa_stream_dedup_"
+    before = {
+        d for d in os.listdir(tempfile.gettempdir()) if d.startswith(prefix)
+    }
+    got = E.queries()["streaming_dedup"](spark, sf).collect()
+    after = {
+        d for d in os.listdir(tempfile.gettempdir()) if d.startswith(prefix)
+    }
+    assert after <= before, f"scratch dir left behind: {after - before}"
+    # SQL_STREAMING_DEDUP: one 'c<doc_id % 37>' per residue in the input
+    residues = {
+        r["m"]
+        for r in E._derived_sequences(spark, sf)
+        .selectExpr("doc_id % 37 AS m")
+        .distinct()
+        .collect()
+    }
+    contents = [r["content"] for r in got]
+    assert sorted(contents) == sorted(f"c{m}" for m in residues)
