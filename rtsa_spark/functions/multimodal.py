@@ -392,16 +392,6 @@ def extract_feature_digests(
     return media.mapInPandas(it, schema)
 
 
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — must never read the payload column
-    (Parquet column pruning; assert via .explain / tests)."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("width").alias("avg_width"),
-        F.avg("n_frames").alias("avg_frames"),
-    )
-
-
 def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
     """Frame-sampling manifest (video): one output row per sampled frame
     index — pure Catalyst (sequence + explode), payload untouched."""

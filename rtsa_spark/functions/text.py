@@ -94,20 +94,15 @@ def winnow_fingerprints(
     Documents shorter than k words contribute their whole text as the
     single gram.
     """
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError("hash_fn must be 'xxhash64' or 'md5'")
+    from ..operators.dedup import _hash64
+
+    h = _hash64(hash_fn)
     words = F.split(F.lower(F.col(text_col)), " ")
     n_g = F.greatest(F.size(words) - k, F.lit(0))
     grams = F.transform(
         F.sequence(F.lit(0), n_g),
         lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
     )
-    if hash_fn == "md5":
-        def h(g):
-            return F.conv(F.substring(F.md5(g), 1, 12), 16, 10).cast("bigint")
-    else:
-        def h(g):
-            return F.xxhash64(g)
     hashes = F.transform(grams, h)
     n_w = F.greatest(F.size(hashes) - w, F.lit(0))
     fps = F.array_distinct(

@@ -132,21 +132,6 @@ def matrix_profile(
     )
 
 
-def motif_topk(mp_df: DataFrame, key_col: str, k: int = 3) -> DataFrame:
-    """Top-k motif windows per key from a matrix-profile frame: the k
-    smallest profile values (ties to earliest window). Rank 1 is the
-    key's best-repeated shape; feed ``F.desc('d2')`` yourself for
-    discords."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key_col).orderBy(F.asc("d2"), F.asc("w_start"))
-    return (
-        mp_df.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(key_col, "rank", "w_start", "nn_start", "d2")
-    )
-
-
 def sax_words(
     df: DataFrame,
     key_col: str,

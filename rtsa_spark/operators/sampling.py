@@ -23,7 +23,8 @@ and multi-engine audits agree row-for-row:
 Oracle portability: the hash is the 48-bit integer prefix of md5, which
 DuckDB replays as ``('0x' || substr(md5(x), 1, 12))::BIGINT`` — proven
 version-stable (unlike blob/encode parsing). Spark computes the identical
-value via ``conv(substring(md5(x), 1, 12), 16, 10)``.
+value via ``conv(substring(md5(x), 1, 12), 16, 10)``, the md5 mode of
+:func:`rtsa_spark.operators.sketch._h48`.
 """
 
 from __future__ import annotations
@@ -31,15 +32,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from rtsa_spark.operators.sketch import _h48
+
 #: modulus for hash buckets: 10^4 buckets = exact e4 rates, far below the
 #: 2^48 hash range so the bucket distribution is uniform to ~3.6e-11
 BUCKETS = 10_000
-
-
-def _h48(col):
-    """Portable 48-bit md5-prefix hash of a string column — the ONE copy
-    of this module's documented cross-engine recipe."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
 
 
 def hash_bucket(key_col, salt: str):
@@ -171,9 +168,7 @@ def chunk_documents(
         F.floor(F.col("start_tok") / stride).cast("bigint").alias("chunk_id"),
         F.col("start_tok").cast("bigint").alias("start_tok"),
         F.size(piece).cast("bigint").alias("n_tok"),
-        F.conv(F.substring(F.md5(joined), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("chunk_hash"),
+        _h48(joined).alias("chunk_hash"),
     )
 
 
@@ -621,9 +616,7 @@ def dsir_select(
                     ),
                 ).otherwise(F.expr("array()")),
             ),
-            lambda f: (
-                F.conv(F.substring(F.md5(f), 1, 12), 16, 10).cast("bigint") % m
-            ),
+            lambda f: _h48(f) % m,
         ).alias("_bs"),
     )
     feats = buckets.select("_id", F.explode("_bs").alias("b"))

@@ -474,94 +474,22 @@ class TierPipeline:
             df = df.where(F.col("source").isin(list(sources)))
         return df
 
-    def read_stage_changes(
-        self, stage: str, since: int, until: int | None = None
-    ) -> DataFrame:
-        """Incremental consumption of a snapshot-backed stage: the rows
-        that changed between checkpoint ``since`` and ``until`` (default
-        current), tagged ``_change_type`` ∈ {INSERT, DELETE} — see
-        :meth:`SnapshotStore.read_changes`.  A downstream consumer that
-        recorded the snapshot id it last processed re-reads only the
-        changed months' version dirs, O(changed months) never O(table).
-        Plain stages hold only current state and refuse loudly."""
-        if not self._is_snapshot_stage(stage):
-            raise ValueError(
-                f"stage {stage!r} is not snapshot-backed; add its tier to "
-                f"snapshot_tiers for changelog reads"
-            )
-        return self._store(stage).read_changes(since, until)
-
-    def tag_stage(
-        self, stage: str, name: str, snapshot_id: int | None = None
-    ) -> int:
-        """Pin a snapshot-backed stage's checkpoint under a name (default:
-        current) — readable as ``read_stage(stage, asof=name)`` and immune
-        to ``expire_snapshots`` until :meth:`drop_stage_tag` releases it.
-        See :meth:`SnapshotStore.tag`."""
-        if not self._is_snapshot_stage(stage):
-            raise ValueError(
-                f"stage {stage!r} is not snapshot-backed; add its tier to "
-                f"snapshot_tiers for tags"
-            )
-        return self._store(stage).tag(name, snapshot_id)
-
-    def drop_stage_tag(self, stage: str, name: str) -> None:
-        """Release a stage tag (metadata-only) — see
-        :meth:`SnapshotStore.drop_tag`."""
-        if not self._is_snapshot_stage(stage):
-            raise ValueError(f"stage {stage!r} is not snapshot-backed")
-        self._store(stage).drop_tag(name)
-
     def stage_store(self, stage: str) -> SnapshotStore:
         """The :class:`SnapshotStore` behind a snapshot-backed stage —
-        the on-ramp for store-level operations the pipeline doesn't wrap
-        (branch staging via ``publish(df, branch=...)``, ``read_changes``
-        between arbitrary refs, row-level ``delete_where``,
-        ``refs()``/``files()`` metadata views)."""
+        the one way into its store-level operations: changelog reads
+        (``read_changes(since)``), tags (``tag``/``drop_tag``, readable as
+        ``read_stage(stage, asof=name)``), write-audit-publish branches
+        (``branch``, ``refresh_months(df, months, branch=name)``,
+        ``fast_forward``, ``drop_branch``), row-level ``delete_where``,
+        ``refs()``/``files()`` metadata views, and CDC maintenance of a
+        coarser tier via :func:`rtsa_spark.sync.sync_next` over two stage
+        stores.  Plain stages hold only current state and refuse."""
         if not self._is_snapshot_stage(stage):
             raise ValueError(
                 f"stage {stage!r} is not snapshot-backed; add its tier to "
                 f"snapshot_tiers"
             )
         return self._store(stage)
-
-    def branch_stage(
-        self, stage: str, name: str, snapshot_id: int | str | None = None
-    ) -> int:
-        """Cut a mutable branch ref on a snapshot-backed stage for
-        write-audit-publish staging — see :meth:`SnapshotStore.branch`.
-        Stage corrections onto it via
-        ``stage_store(stage).refresh_months(df, months, branch=name)``,
-        audit with ``read_stage(stage, asof=name)``, then land with
-        :meth:`fast_forward_stage`."""
-        return self.stage_store(stage).branch(name, snapshot_id)
-
-    def fast_forward_stage(self, stage: str, name: str) -> int:
-        """Land a staged branch on the stage's main history (metadata-only;
-        refused on divergence) — see :meth:`SnapshotStore.fast_forward`."""
-        return self.stage_store(stage).fast_forward(name)
-
-    def drop_stage_branch(self, stage: str, name: str) -> None:
-        """Delete a stage branch ref — see
-        :meth:`SnapshotStore.drop_branch`."""
-        self.stage_store(stage).drop_branch(name)
-
-    def sync_stage_next(
-        self, from_tier: str, to_tier: str, since: int | None = None
-    ) -> int | None:
-        """CDC-driven incremental maintenance between two snapshot-backed
-        tiers: fold ``rollup_<from_tier>``'s changelog since the last sync
-        into ``rollup_<to_tier>``, recomputing only the affected coarser
-        buckets — see :func:`rtsa_spark.sync.sync_next`.  Both tiers must
-        be in ``snapshot_tiers``."""
-        from rtsa_spark.sync import sync_next
-
-        return sync_next(
-            self.stage_store(f"rollup_{from_tier}"),
-            self.stage_store(f"rollup_{to_tier}"),
-            to_tier,
-            since=since,
-        )
 
     def expire_snapshots(self, keep_last: int = 2) -> dict[str, dict]:
         """Expire old checkpoints on every snapshot-backed stage (rollup

@@ -146,29 +146,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
-) -> list[str]:
-    """Register the standard test-data parquet tables as temp views so the
-    whole engine is drivable from ``spark.sql`` — the SQL-user on-ramp
-    (the driver's DuckDB oracle pre-registers the same names).
-
-    Returns the view names registered; missing files are skipped (the
-    caller sees what it got).
-    """
-    import os
-
-    names = tables or (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    )
-    done = []
-    for t in names:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if not os.path.exists(path):
-            continue
-        spark.read.parquet(path).createOrReplaceTempView(t)
-        done.append(t)
-    return done

@@ -173,58 +173,3 @@ def run_stream_to_parquet(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def streaming_band_breach(
-    stream: DataFrame,
-    profile: DataFrame,
-    key_col: str = "source",
-    ts_col: str = "ts",
-    value_col: str = "n_tok",
-    phase: str = "hour",
-    lo_p: int = 10,
-    hi_p: int = 90,
-) -> DataFrame:
-    """Live seasonal-envelope monitoring: the stream-static twin of
-    ``operators/monitor.phase_band_breach`` — each arriving event joins
-    the PRECOMPUTED per-(key, phase) percentile profile (a static
-    DataFrame refreshed by the batch tier job) and is flagged when it
-    leaves its [p_lo, p_hi] band.
-
-    Stream-static equi-joins are stateless in Structured Streaming (the
-    static side is broadcast per micro-batch; no watermark or state store
-    needed), so this monitor adds zero streaming state — exactly the
-    right cost for a flag projection. Phase extraction and the e2-domain
-    cross-multiplied comparison are the batch operator's, so a row flags
-    identically whether it arrives live or in the backfill.
-    """
-    lo, hi = F.col(f"p{lo_p}_e2"), F.col(f"p{hi_p}_e2")
-    if phase == "hour":
-        ph = F.pmod(F.expr(f"(cast({ts_col} as long) div 3600)"), F.lit(24))
-    elif phase == "dow":
-        ph = F.pmod(
-            F.expr(f"(cast({ts_col} as long) div 86400) + 4"), F.lit(7)
-        )
-    else:
-        raise ValueError(f"phase must be 'hour' or 'dow', got {phase!r}")
-    tagged = stream.select(
-        F.col(key_col).alias("key"),
-        F.col(ts_col).alias("ts"),
-        ph.cast("int").alias("phase"),
-        F.col(value_col).cast("bigint").alias("x"),
-    )
-    # LEFT join: an event from a key/phase the profile hasn't covered yet
-    # (new source before the next batch refresh) must stay VISIBLE with
-    # null bands + unprofiled=true, not silently vanish from the monitor
-    j = tagged.join(F.broadcast(profile), ["key", "phase"], "left")
-    return j.select(
-        "key",
-        "ts",
-        "phase",
-        "x",
-        lo.alias(f"p{lo_p}_e2"),
-        hi.alias(f"p{hi_p}_e2"),
-        (100 * F.col("x") < lo).alias("below"),
-        (100 * F.col("x") > hi).alias("above"),
-        lo.isNull().alias("unprofiled"),
-    )

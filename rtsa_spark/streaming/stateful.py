@@ -86,100 +86,3 @@ def streaming_source_state(
     return stream.groupBy("source").applyInPandasWithState(
         fn, OUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
     )
-
-
-LIVENESS_OUT = (
-    "source string, last_ts timestamp, n_seq bigint, stale boolean"
-)
-LIVENESS_STATE = "n_seq bigint, last_ts_ns bigint"
-
-
-def streaming_liveness(
-    stream: DataFrame,
-    max_age: str = "1 hour",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming source-liveness monitor — the stateful-timeout twin of
-    ``operators/monitor.stale_sources``: a source that receives data
-    emits a fresh heartbeat row (``stale=false``); a source that goes
-    SILENT is reported by Spark's event-time timeout machinery the
-    moment the stream's watermark passes ``last_ts + max_age``
-    (``stale=true``), with no poll loop and no per-event state — state
-    is one (count, last_ts) pair per source.
-
-    Uses ``GroupStateTimeout.EventTimeTimeout``: the timeout timestamp is
-    set to ``last_ts + max_age`` on every update, so silence is measured
-    on the EVENT clock (replay-safe, backfill gives identical flags),
-    not the processing clock. Requires the watermark on ``ts_col``.
-    """
-    max_age_ms = int(pd.Timedelta(max_age).total_seconds() * 1000)
-
-    def fn(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.hasTimedOut:
-            n, last_ns = state.get
-            state.update((n, last_ns))  # keep state; re-arm below
-            # re-arm RELATIVE TO THE WATERMARK (a timestamp at or before
-            # it is invalid): one more silent max_age -> one more alert
-            state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + max_age_ms
-            )
-            yield pd.DataFrame(
-                [
-                    {
-                        "source": key[0],
-                        "last_ts": pd.Timestamp(last_ns),
-                        "n_seq": n,
-                        "stale": True,
-                    }
-                ]
-            )
-            return
-        n, last_ns = state.get if state.exists else (0, None)
-        for pdf in pdfs:
-            pdf = pdf.dropna(subset=[ts_col])  # NaT would poison last_ts
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            mx = int(
-                pdf[ts_col].to_numpy("datetime64[ns]").view("int64").max()
-            )
-            last_ns = mx if last_ns is None else max(last_ns, mx)
-        if last_ns is None:
-            return  # fresh group whose only rows had null ts: nothing yet
-        state.update((n, last_ns))
-        # Clamp above the current watermark: flatMapGroupsWithState does
-        # not drop late INPUT rows, so a key whose newest event already
-        # trails the watermark by > max_age would otherwise hand
-        # setTimeoutTimestamp a stale instant (must be strictly later
-        # than the watermark) and kill the query.
-        state.setTimeoutTimestamp(
-            max(
-                last_ns // 1_000_000 + max_age_ms,
-                state.getCurrentWatermarkMs() + 1,
-            )
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    "source": key[0],
-                    "last_ts": pd.Timestamp(last_ns),
-                    "n_seq": n,
-                    "stale": False,
-                }
-            ]
-        )
-
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy("source")
-        .applyInPandasWithState(
-            fn,
-            LIVENESS_OUT,
-            LIVENESS_STATE,
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )

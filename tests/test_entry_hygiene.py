@@ -10,6 +10,7 @@ cover exactly the same names.
 from __future__ import annotations
 
 import ast
+import glob
 import os
 import re
 
@@ -170,3 +171,79 @@ def test_streaming_dedup_leaves_no_scratch_dir(spark):
     }
     contents = [r["content"] for r in got]
     assert sorted(contents) == sorted(f"c{m}" for m in residues)
+
+
+def _py_files(root: str, package: str) -> list[str]:
+    return glob.glob(os.path.join(root, package, "**", "*.py"), recursive=True)
+
+
+def _public_library_defs(root: str) -> set[str]:
+    """Public top-level defs under rtsa_spark/, plus ``TierPipeline.<m>``
+    for each public TierPipeline method."""
+    names = set()
+    for path in _py_files(root, "rtsa_spark"):
+        for node in ast.parse(open(path).read()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            if not node.name.startswith("_"):
+                names.add(node.name)
+            if node.name == "TierPipeline":
+                names |= {
+                    f"TierPipeline.{m.name}" for m in node.body
+                    if isinstance(m, ast.FunctionDef)
+                    and not m.name.startswith("_")
+                }
+    return names
+
+
+def _referenced_outside_tests(root: str) -> set[str]:
+    """Every name an AST outside tests/ mentions: a Name, an attribute, or
+    an imported name, in the library, the entry file, the benchmarks and
+    the tools. Docstrings, comments and ``__all__`` strings are not
+    references."""
+    paths = (
+        _py_files(root, "rtsa_spark")
+        + [ENTRY]
+        + glob.glob(os.path.join(root, "bench*.py"))
+        + _py_files(root, "perfbench")
+        + _py_files(root, "tools")
+    )
+    refs = set()
+    for path in paths:
+        for n in ast.walk(ast.parse(open(path).read())):
+            if isinstance(n, ast.Name):
+                refs.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                refs.add(n.attr)
+            elif isinstance(n, ast.alias):
+                refs.add(n.name.rsplit(".", 1)[-1])
+    return refs
+
+
+def test_library_surface_has_callers():
+    """Library code that only its own tests call is surface nobody uses:
+    every public def under rtsa_spark/ (and every public TierPipeline
+    method) needs a caller outside tests/, or a line in the README's
+    "Library-only surface" list saying why it stays. The list must name
+    exactly the defs without such a caller, so it cannot go stale."""
+    root = os.path.dirname(ENTRY)
+    refs = _referenced_outside_tests(root)
+    test_only = {
+        d for d in _public_library_defs(root)
+        if d.rsplit(".", 1)[-1] not in refs
+    }
+    readme = open(os.path.join(root, "README.md")).read()
+    m = re.search(
+        r"^## Library-only surface\n(.*?)(?=^## |\Z)", readme, re.M | re.S
+    )
+    assert m, "README.md lost its Library-only surface list"
+    listed = set(re.findall(r"^- `([\w.]+)`", m.group(1), re.M))
+    missing = sorted(test_only - listed)
+    assert not missing, (
+        "public defs only tests call — delete them, or list them under "
+        f"README 'Library-only surface' with a reason: {missing}"
+    )
+    assert not listed - test_only, (
+        "README 'Library-only surface' names defs that are gone or now "
+        f"have a caller: {sorted(listed - test_only)}"
+    )

@@ -6,8 +6,6 @@ import pytest
 
 from rtsa_spark.pipeline import TierPipeline
 from tests.fragment import split_parquet_dir
-from rtsa_spark.plans.skew import dominant_keys, rollup_raw_salted
-from rtsa_spark.operators.rollup import rollup_raw
 
 
 def _hashes(spark, path):
@@ -203,20 +201,6 @@ def test_partition_lineage_refresh_scoped(spark, tiny_sequences, tmp_path):
     assert {r["stage"] for r in refresh_rows} == {
         f"rollup_{t}" for t in p.tiers
     }
-
-
-def test_salted_rollup_equals_plain(spark, tiny_sequences):
-    import pyspark.sql.functions as F
-
-    plain = rollup_raw(tiny_sequences)
-    salted = rollup_raw_salted(tiny_sequences, n_salt=8)
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
-def test_dominant_keys_finds_skewed_source(spark, tiny_sequences):
-    keys = dominant_keys(tiny_sequences, sample_fraction=0.5)
-    assert "s000" in keys  # synth gives s000 ~30% of rows
 
 
 def test_encoded_stage_publish_resume_refresh(spark, tiny_sequences, tmp_path):

@@ -179,9 +179,10 @@ def test_encode_downstream_of_snapshot_tier(spark, seqs, tmp_path):
 
 
 def test_read_stage_changes_incremental_consumption(spark, seqs, tmp_path):
-    """read_stage_changes: a consumer holding the last-processed snapshot
-    id reads exactly the correction delta (DELETE old / INSERT new for
-    the refreshed month only); plain stages refuse loudly."""
+    """stage_store(stage).read_changes: a consumer holding the
+    last-processed snapshot id reads exactly the correction delta (DELETE
+    old / INSERT new for the refreshed month only); plain stages refuse
+    loudly."""
     base = str(tmp_path / "chg")
     p = _mk(spark, base)
     p.run(seqs)
@@ -192,7 +193,7 @@ def test_read_stage_changes_incremental_consumption(spark, seqs, tmp_path):
     )
     p.refresh_months(corrected, ["2024-02"])
 
-    ch = p.read_stage_changes("rollup_hourly", since=pre).cache()
+    ch = p.stage_store("rollup_hourly").read_changes(since=pre).cache()
     months = {
         r["m"]
         for r in ch.select(
@@ -214,16 +215,16 @@ def test_read_stage_changes_incremental_consumption(spark, seqs, tmp_path):
         assert (n, s) == (n0 + ni - nd, s0 + si - sd), src
 
     with pytest.raises(ValueError, match="not snapshot-backed"):
-        p.read_stage_changes("rollup_daily", since=pre)
+        p.stage_store("rollup_daily").read_changes(since=pre)
 
 
 def test_stage_tags_pin_and_read(spark, seqs, tmp_path):
-    """tag_stage/drop_stage_tag: a named checkpoint reads via asof=name,
-    survives expire_snapshots, and plain stages refuse."""
+    """stage_store(stage).tag/drop_tag: a named checkpoint reads via
+    asof=name, survives expire_snapshots, and plain stages refuse."""
     base = str(tmp_path / "tags")
     p = _mk(spark, base)
     p.run(seqs)
-    assert p.tag_stage("rollup_hourly", "baseline") == 1
+    assert p.stage_store("rollup_hourly").tag("baseline") == 1
     feb = F.date_format(F.col("ts"), "yyyy-MM") == "2024-02"
     corrected = seqs.withColumn(
         "n_tok", F.when(feb, F.col("n_tok") + 1).otherwise(F.col("n_tok"))
@@ -233,12 +234,12 @@ def test_stage_tags_pin_and_read(spark, seqs, tmp_path):
     orig = _totals(p.read_stage("rollup_hourly", asof=1))
     p.expire_snapshots(keep_last=1)
     assert _totals(p.read_stage("rollup_hourly", asof="baseline")) == orig
-    p.drop_stage_tag("rollup_hourly", "baseline")
+    p.stage_store("rollup_hourly").drop_tag("baseline")
     p.expire_snapshots(keep_last=1)
     with pytest.raises(ValueError, match="unknown tag"):
         p.read_stage("rollup_hourly", asof="baseline")
     with pytest.raises(ValueError, match="not snapshot-backed"):
-        p.tag_stage("rollup_daily", "x")
+        p.stage_store("rollup_daily").tag("x")
 
 
 def test_stage_branch_write_audit_publish(spark, seqs, tmp_path):
@@ -246,8 +247,8 @@ def test_stage_branch_write_audit_publish(spark, seqs, tmp_path):
     pipe.run(seqs)
     before = _totals(pipe.read_stage("rollup_hourly"))
 
-    pipe.branch_stage("rollup_hourly", "audit")
     store = pipe.stage_store("rollup_hourly")
+    store.branch("audit")
     hourly = pipe.read_stage("rollup_hourly")
     feb = F.date_format("bucket_start", "yyyy-MM") == "2024-02"
     store.refresh_months(
@@ -259,15 +260,13 @@ def test_stage_branch_write_audit_publish(spark, seqs, tmp_path):
     staged = _totals(pipe.read_stage("rollup_hourly", asof="audit"))
     assert staged != before
 
-    pipe.fast_forward_stage("rollup_hourly", "audit")
-    pipe.drop_stage_branch("rollup_hourly", "audit")
+    store.fast_forward("audit")
+    store.drop_branch("audit")
     assert _totals(pipe.read_stage("rollup_hourly")) == staged
 
     # plain stages refuse branch ops
     with pytest.raises(ValueError, match="not snapshot-backed"):
-        pipe.branch_stage("rollup_daily", "x")
-    with pytest.raises(ValueError, match="not snapshot-backed"):
-        pipe.stage_store("rollup_daily")
+        pipe.stage_store("rollup_daily").branch("x")
 
 
 def test_read_stage_timestamp_as_of(spark, seqs, tmp_path):
@@ -289,25 +288,34 @@ def test_read_stage_timestamp_as_of(spark, seqs, tmp_path):
 
 def test_sync_stage_next_maintains_daily_from_hourly(spark, seqs, tmp_path):
     from rtsa_spark.operators.rollup import rollup_next
+    from rtsa_spark.sync import sync_next
 
     pipe = TierPipeline(
         spark, str(tmp_path / "cdc"),
         tiers=["raw", "hourly"], gapfill_tiers=(), metrics_tiers=(),
         snapshot_tiers=("hourly", "daily"),
     )
+
+    def sync_daily():
+        return sync_next(
+            pipe.stage_store("rollup_hourly"),
+            pipe.stage_store("rollup_daily"),
+            "daily",
+        )
+
     pipe.run(seqs)
-    assert pipe.sync_stage_next("hourly", "daily") is not None
+    assert sync_daily() is not None
     want = rollup_next(pipe.read_stage("rollup_hourly"), "daily")
     assert _totals(pipe.read_stage("rollup_daily")) == _totals(want)
 
     # a pipeline-level correction flows: hourly refresh -> CDC sync
     corrected = seqs.withColumn("n_tok", F.col("n_tok") + 1)
     pipe.refresh_months(corrected, ["2024-02"])
-    assert pipe.sync_stage_next("hourly", "daily") is not None
+    assert sync_daily() is not None
     want2 = rollup_next(pipe.read_stage("rollup_hourly"), "daily")
     assert _totals(pipe.read_stage("rollup_daily")) == _totals(want2)
     # and a no-change re-sync is a no-op
-    assert pipe.sync_stage_next("hourly", "daily") is None
+    assert sync_daily() is None
 
 
 def test_encoded_stage_snapshot_backed(spark, seqs, tmp_path):

@@ -205,17 +205,6 @@ def test_rollup_ohlc_hand_case(spark):
     assert r["n"] == 5
 
 
-def test_register_views_sql_onramp(spark):
-    from rtsa_spark.session import register_views
-
-    got = register_views(spark, "/root/testdata/sf0.001")
-    assert "events" in got and "documents" in got
-    n = spark.sql("SELECT count(*) AS n FROM events").collect()[0]["n"]
-    assert n > 0
-    # missing files are skipped, not fatal
-    assert register_views(spark, "/nonexistent") == []
-
-
 def test_token_diversity_hand_case(spark):
     import datetime as dt
 

@@ -139,102 +139,6 @@ def test_stateful_source_state_across_batches(spark, tmp_path):
         assert final[s]["max_gap_s"] == gaps[s]
 
 
-def test_streaming_band_breach_matches_batch(spark, tiny_sequences, tmp_path):
-    """Stream-static envelope monitor: availableNow replay of the raw
-    events against the batch-computed hourly profile flags exactly the
-    rows the batch operator flags."""
-    from rtsa_spark.operators.monitor import phase_band_breach
-    from rtsa_spark.operators.sessionize import phase_profile
-    from rtsa_spark.streaming.rollup_stream import streaming_band_breach
-
-    src = str(tmp_path / "breach_src")
-    tiny_sequences.coalesce(2).write.mode("overwrite").parquet(src)
-    batch = spark.read.parquet(src)
-
-    profile = phase_profile(batch, "source", "ts", "n_tok", "hour").drop(
-        "n_buckets"
-    )
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    flagged = streaming_band_breach(
-        stream, profile, "source", "ts", "n_tok", "hour"
-    )
-
-    out = str(tmp_path / "breach_out")
-    q = (
-        flagged.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "breach_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(out)
-    want = phase_band_breach(batch, "source", "ts", "n_tok", "hour")
-    assert got.count() == want.count()
-    assert got.where("above").count() == want.where("above").count()
-    assert (
-        got.select("key", "ts", "x", "below", "above")
-        .exceptAll(
-            want.select(
-                "key", F.col("bucket").alias("ts"), "x", "below", "above"
-            )
-        )
-        .count()
-        == 0
-    )
-
-
-def test_streaming_liveness_event_time_timeout(spark, tmp_path):
-    """Source B stops after batch 1; once batch 3's watermark (event time
-    t0+3h minus 10 min) passes B's last_ts + max_age (t0+1h), Spark's
-    EventTimeTimeout fires and the monitor emits stale=true for B —
-    replay-safe silence detection with O(sources) state."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from rtsa_spark.streaming.stateful import streaming_liveness
-
-    src = tmp_path / "live_src"
-    src.mkdir()
-    t0 = dt.datetime(2024, 1, 1)
-    schema = "source string, ts timestamp, n_tok long"
-
-    def write_file(i, rows):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"f{i}.parquet"))
-
-    write_file(0, [("A", t0, 1), ("B", t0, 2)])
-    write_file(1, [("A", t0 + dt.timedelta(hours=3), 3)])
-    write_file(2, [("A", t0 + dt.timedelta(hours=3, minutes=1), 4)])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    out = streaming_liveness(stream, max_age="1 hour", watermark="10 minutes")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("live_t")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("SELECT * FROM live_t").collect()
-    b_stale = [r for r in rows if r["source"] == "B" and r["stale"]]
-    assert len(b_stale) >= 1 and b_stale[0]["n_seq"] == 1
-    assert not [r for r in rows if r["source"] == "A" and r["stale"]]
-    # heartbeats: every batch with data emitted a fresh row
-    assert [r for r in rows if r["source"] == "A" and not r["stale"]]
-
-
 def test_streaming_sessions_boundary_and_merge(spark, tmp_path):
     """Native session windows: an event exactly gap_s after its
     predecessor MERGES into the session (inclusive boundary — matches

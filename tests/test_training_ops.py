@@ -117,14 +117,11 @@ def test_multimodal_plumbing(spark):
     from rtsa_spark.functions.multimodal import (
         extract_features,
         frame_sample_plan,
-        media_stats,
         synth_media,
     )
 
     media = synth_media(spark, 60, payload_bytes=128)
     assert media.count() == 60
-    stats = {r["kind"]: r["n"] for r in media_stats(media).collect()}
-    assert sum(stats.values()) == 60
 
     feats = extract_features(media, fake=True)
     rows = feats.collect()

@@ -15,9 +15,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
+import shutil
 import sys
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_of(df) -> str:
@@ -33,6 +36,16 @@ def check(name: str, ok: bool, detail: str = "") -> bool:
 
 
 def main() -> int:
+    """Run every check with its files under one fresh scratch dir, which
+    is removed however the run ends."""
+    tmp = tempfile.mkdtemp(prefix="rtsa_audit_")
+    try:
+        return _audit(tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _audit(tmp: str) -> int:
     from rtsa_spark.operators.gapfill import gapfill_linear
     from rtsa_spark.operators.masks import apply_mask, mask_min_observations
     from rtsa_spark.operators.rollup import rollup_next, rollup_raw
@@ -45,7 +58,7 @@ def main() -> int:
         # markers from static explain; disable it for static-structure audit
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
-    seq_path = "/tmp/rtsa_audit_seq"
+    seq_path = os.path.join(tmp, "seq")
     synth_sequences(spark, 5000, n_sources=4).write.mode("overwrite").parquet(seq_path)
     seq = spark.read.parquet(seq_path)
 
@@ -538,7 +551,7 @@ def main() -> int:
     #     min/max stats skip whole blocks before any bitstream is read)
     from rtsa_spark.operators.encode import encode_tier, read_points
 
-    blocks_path = "/tmp/rtsa_audit/encoded_blocks"
+    blocks_path = os.path.join(tmp, "encoded_blocks")
     encode_tier(hr, value_col="n_tok_sum").write.mode("overwrite").parquet(
         blocks_path
     )
@@ -559,7 +572,7 @@ def main() -> int:
     #     the delta-sized cost the streaming snapshot sink depends on
     from rtsa_spark.operators.rollup import merge_rollup
 
-    hr_path = "/tmp/rtsa_audit/hr_tier"
+    hr_path = os.path.join(tmp, "hr_tier")
     hr.write.mode("overwrite").parquet(hr_path)
     hr_a = spark.read.parquet(hr_path)
     mg_plan = plan_of(merge_rollup(hr_a, hr_a))
@@ -575,11 +588,7 @@ def main() -> int:
     #     mapped version dirs (no recursive scan over retained versions)
     from rtsa_spark.snapshot import SnapshotStore
 
-    import shutil as _sh
-
-    snap_base = "/tmp/rtsa_audit/snap"
-    _sh.rmtree(snap_base, ignore_errors=True)
-    _st = SnapshotStore(spark, snap_base)
+    _st = SnapshotStore(spark, os.path.join(tmp, "snap"))
     _st.publish(hr)
     _st.refresh_months(
         hr.where(F.date_format("bucket_start", "yyyy-MM") == "2024-02"),
