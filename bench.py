@@ -343,6 +343,7 @@ def run_bench(sf_dir: str, cores: int) -> dict:
         "new_stages_r4c": new_r4c,
         "new_stages_r4d": new_r4d,
     }
+    out.update(jit_accounting(spark))
     # CPU of the whole tree BEFORE stop: JVM utime+stime+children (python
     # workers) from /proc (py4j does not reap the JVM into rusage)
     import resource as _res
@@ -362,6 +363,28 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     out["cpu_sec_tree"] = round(cpu, 1)
     spark.stop()
     return out
+
+
+def jit_accounting(spark) -> dict:
+    """Whole-run JIT and codegen cost of the driver JVM (local mode runs
+    every task in it): HotSpot's accumulated compiler-thread time, and the
+    count and Janino compile time of Spark's generated classes.
+
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` is a histogram of per-class
+    compile ms; its reservoir keeps every sample up to 1028 compiles, so
+    the sum is exact until then and a scaled sample sum beyond."""
+    jvm = spark.sparkContext._jvm
+    jit_ms = jvm.java.lang.management.ManagementFactory.getCompilationMXBean(
+    ).getTotalCompilationTime()
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = hist.getCount()
+    kept = list(hist.getSnapshot().getValues())
+    codegen_ms = sum(kept) * n / len(kept) if kept else 0.0
+    return {
+        "jit_compile_s": round(jit_ms / 1000, 3),
+        "codegen_classes": int(n),
+        "codegen_compile_s": round(codegen_ms / 1000, 3),
+    }
 
 
 def main():

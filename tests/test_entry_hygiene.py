@@ -104,6 +104,20 @@ def test_parity_appendix_covers_every_query():
     )
 
 
+def test_parity_generator_paths_are_this_checkout():
+    """tools/gen_parity_appendix.py reads the entry file of, and writes the
+    PARITY.md of, the checkout it sits in: run from a second clone it must
+    never rewrite another checkout's appendix."""
+    import importlib.util
+
+    tool = os.path.join(os.path.dirname(ENTRY), "tools", "gen_parity_appendix.py")
+    spec = importlib.util.spec_from_file_location("gen_parity_appendix", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert os.path.samefile(mod.ENTRY, ENTRY)
+    assert os.path.samefile(mod.PARITY, os.path.join(os.path.dirname(ENTRY), "PARITY.md"))
+
+
 def test_query_functions_unique():
     src = open(ENTRY).read()
     names = re.findall(r"^def (q_\w+)\(", src, re.M)

@@ -12,10 +12,13 @@ Usage: python tools/gen_parity_appendix.py
 from __future__ import annotations
 
 import ast
+import os
 import re
 
-ENTRY = "/root/repo/__spark_entry__.py"
-PARITY = "/root/repo/PARITY.md"
+# the checkout this script sits in, not whichever one the shell is in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENTRY = os.path.join(ROOT, "__spark_entry__.py")
+PARITY = os.path.join(ROOT, "PARITY.md")
 MARK_BEGIN = "<!-- BEGIN QUERY APPENDIX (generated by tools/gen_parity_appendix.py) -->"
 MARK_END = "<!-- END QUERY APPENDIX -->"
 
