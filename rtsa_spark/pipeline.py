@@ -21,9 +21,11 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
   only the affected months' partitions like the tiers themselves;
 - a stage is SKIPPED on re-run when a SUCCESS or REFRESH lineage row
   exists whose input fingerprint matches. The fingerprint is a CONTENT hash
-  (``count:bit_xor(xxhash64(*cols))``, order-independent, one cheap
-  columnar scan) — a corrected input with the same row count no longer
-  silently skips recomputation. On Iceberg the seam is the snapshot id;
+  (``count:bit_xor(xxhash64(*cols))``, order-independent) — a corrected
+  input with the same row count no longer silently skips recomputation.
+  A published stage's own fingerprint, the input of the stages built on
+  it, is observed on its publish write, so a cold run scans no published
+  tier back. On Iceberg the seam is the snapshot id;
 - full-stage writes go to a ``_tmp`` dir first and are atomically renamed,
   so a stage killed mid-write never leaves a half-table behind the SUCCESS
   check. Partition-scoped refreshes use dynamic partition overwrite and
@@ -62,14 +64,18 @@ from datetime import datetime, timedelta
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import MapType
 
 from rtsa_spark.operators.encode import encode_tier
 from rtsa_spark.operators.gapfill import gapfill_linear
 from rtsa_spark.operators.metrics import compute_metrics
 from rtsa_spark.operators.rollup import TIER_ORDER, rollup_next, rollup_raw
 from rtsa_spark.snapshot import SnapshotStore
-from rtsa_spark.storage import cluster_for_publish
+from rtsa_spark.storage import (
+    cluster_for_publish,
+    fingerprint_aggs,
+    fingerprint_text,
+    observe_fingerprint,
+)
 
 P_MONTH = "p_month"
 _MONTH_RE = re.compile(r"\d{4}-(0[1-9]|1[0-2])")
@@ -112,29 +118,15 @@ def _rollup(tier: str, seq: DataFrame, finer: DataFrame | None) -> DataFrame:
     return rollup_raw(seq) if tier == "raw" else rollup_next(finer, tier)
 
 
-def _hash_cols(df: DataFrame) -> list:
-    cols = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, MapType):
-            c = F.to_json(c)
-        cols.append(c)
-    return cols
-
-
 def content_fingerprint(df: DataFrame) -> str:
-    """Order-independent content hash of a DataFrame: ``rows:xor-hash``.
-
-    ``bit_xor(xxhash64(*cols))`` is commutative, partitioning-independent,
-    and ANSI-safe; map-typed columns go through ``to_json`` (hashing maps
-    is undefined in Spark). One columnar scan — at 100 TB the production
-    seam replaces this with the Iceberg snapshot id, which is free.
+    """Order-independent content hash of a DataFrame: ``rows:xor-hash``
+    (:func:`rtsa_spark.storage.fingerprint_aggs`: commutative,
+    partitioning-independent, ANSI-safe).  One columnar scan; a publish
+    learns the same value from its own write instead
+    (:func:`rtsa_spark.storage.observe_fingerprint`), and at 100 TB the
+    production seam replaces both with the Iceberg snapshot id.
     """
-    hashed = df.select(F.xxhash64(*_hash_cols(df)).alias("h"))
-    row = hashed.agg(
-        F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("x")
-    ).first()
-    return f"{row['n']}:{row['x'] if row['x'] is not None else 0}"
+    return fingerprint_text(df.agg(*fingerprint_aggs(df)).first())
 
 
 def month_fingerprints(df: DataFrame, ts_col: str = "ts") -> dict[str, str]:
@@ -148,19 +140,12 @@ def month_fingerprints(df: DataFrame, ts_col: str = "ts") -> dict[str, str]:
     against the published one and only the differing months recompute
     (:meth:`TierPipeline.refresh_changed`).
     """
-    hashed = df.select(
-        F.date_format(F.col(ts_col), "yyyy-MM").alias("m"),
-        F.xxhash64(*_hash_cols(df)).alias("h"),
-    )
     rows = (
-        hashed.groupBy("m")
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("x"))
+        df.groupBy(F.date_format(F.col(ts_col), "yyyy-MM").alias("m"))
+        .agg(*fingerprint_aggs(df))
         .collect()
     )
-    return {
-        r["m"]: f"{r['n']}:{r['x'] if r['x'] is not None else 0}"
-        for r in rows
-    }
+    return {r["m"]: fingerprint_text(r) for r in rows}
 
 
 def combine_month_fingerprints(months: dict[str, str]) -> str:
@@ -420,9 +405,10 @@ class TierPipeline:
         ``p_month`` range — directory-level partition pruning on plain
         stages, manifest-level dir listing on snapshot stages — and the
         row predicates land on the parquet scan, where the
-        range-clustered sorted publish (:func:`cluster_for_publish`)
-        makes the row-group min/max envelopes tight.  Encoded-block
-        stages prune on the block ``[bucket_lo, bucket_hi]`` envelope
+        month-rebalanced sorted publish (``write.distribution-mode=hash``,
+        :func:`cluster_for_publish`) makes the row-group min/max
+        envelopes tight.  Encoded-block stages prune on the block
+        ``[bucket_lo, bucket_hi]`` envelope
         (decode of surviving blocks is the caller's step — see
         ``operators.encode.read_points``).  A 3-day dashboard query over
         a 10-year 100 TB tier touches 1-2 month dirs and, within them,
@@ -508,40 +494,56 @@ class TierPipeline:
             P_MONTH, F.date_format(F.col(ts_col), "yyyy-MM")
         )
 
-    def _write_stage(self, stage: str, df: DataFrame, fingerprint: str) -> None:
+    def _write_stage(self, stage: str, df: DataFrame, fingerprint: str) -> str:
         """Compute + atomically publish one stage, ledger-logged.
         Time-bearing stages are written partitionBy(month) so late-data
         refreshes can swap single partition dirs. Snapshot-backed stages
         publish through their store instead: append-only version dirs +
         snapshot-log commit play the tmp-write + atomic rename (a crash
         between data write and log append leaves an orphan no read sees,
-        reaped by expire)."""
+        reaped by expire).
+
+        Returns the content fingerprint of what was published, observed
+        on the publish write itself (:func:`observe_fingerprint`), so no
+        read-back scan is needed.  An observed row count that disagrees
+        with the footer-counted ``rows_out`` raises before the ledger
+        row is written, so the stage is rebuilt on the next run."""
         final = self._stage_path(stage)
         t0 = time.time()
         snap = {}
         if self._is_snapshot_stage(stage):
             st = self._store(stage)
-            st.publish(df)
-            snap = {"snapshot_id": st.current_snapshot()}
+            sid = st.publish(df)
+            snap = {"snapshot_id": sid}
+            written = st.fingerprint(sid)
         else:
             tmp = final + f"._tmp_{self.run_id}"
             ts_col = _time_col(df)
-            if ts_col is None:
-                df.write.mode("overwrite").parquet(tmp)
-            else:
-                (
-                    cluster_for_publish(
-                        self._with_month(df, ts_col), ("source", ts_col)
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy(P_MONTH)
-                    .parquet(tmp)
+            frame = (
+                df
+                if ts_col is None
+                else cluster_for_publish(
+                    self._with_month(df, ts_col), ("source", ts_col)
                 )
+            )
+            observed, obs = observe_fingerprint(frame, df.columns)
+            writer = observed.write.mode("overwrite")
+            if ts_col is not None:
+                writer = writer.partitionBy(P_MONTH)
+            writer.parquet(tmp)
+            written = fingerprint_text(obs.get)
             if os.path.exists(final):
                 shutil.rmtree(final)
             os.rename(tmp, final)
         # per-partition manifest rows double as the stage row/file count
         rows_out, n_files = self._append_manifest(stage, "SUCCESS")
+        n_written = int(written.split(":")[0])
+        if n_written != rows_out:
+            raise RuntimeError(
+                f"publish of {stage!r} observed {n_written} rows on its "
+                f"write but its parquet footers count {rows_out}; no ledger "
+                f"row was written"
+            )
         rows_in = int(fingerprint.split(":")[0]) if ":" in fingerprint else None
         self._append_ledger(
             {
@@ -557,6 +559,7 @@ class TierPipeline:
                 **snap,
             }
         )
+        return written
 
     def _refresh_stage(
         self,
@@ -669,16 +672,19 @@ class TierPipeline:
         encoded, hist or metrics (resume testing)."""
         out: dict[str, str] = {}
 
-        def publish(stage: str, fp: str, build) -> None:
+        def publish(stage: str, fp: str, build) -> str | None:
             # skip a stage whose input fingerprint already committed;
             # _stage_exists, not os.path.exists: a snapshot-backed stage's
             # dir exists as soon as its store object is built, with no
-            # committed snapshot behind it
+            # committed snapshot behind it. Returns the content fingerprint
+            # the publish write observed, None for a skipped stage.
+            written = None
             if not (self._completed(stage, fp) and self._stage_exists(stage)):
-                self._write_stage(stage, build(), fp)
+                written = self._write_stage(stage, build(), fp)
             out[stage] = self._stage_path(stage)
             if fail_after == stage:
                 raise RuntimeError(f"injected failure after {stage}")
+            return written
 
         prev_df: DataFrame | None = None
         # month-grain fingerprints combine into the global one (same single
@@ -698,13 +704,17 @@ class TierPipeline:
         seq_fp = prev_fp
         for tier in self.tiers:
             stage = f"rollup_{tier}"
-            publish(stage, prev_fp, lambda: _rollup(tier, sequences, prev_df))
+            written = publish(
+                stage, prev_fp, lambda: _rollup(tier, sequences, prev_df)
+            )
             tier_df = self._read_stage(stage)
-            # one fingerprint job per tier, shared by every dependent stage
-            # (gapfill / encode / next-tier completion check)
-            tier_fp = content_fingerprint(tier_df)
+            # one fingerprint per tier, shared by every dependent stage
+            # (gapfill / encode / next-tier completion check): the one its
+            # publish observed, or one read-back scan of a skipped stage
+            tier_fp = written or content_fingerprint(tier_df)
+            gap_fp = None
             if tier in self.gapfill_tiers:
-                publish(
+                gap_fp = publish(
                     f"gapfilled_{tier}", tier_fp, lambda: gapfill_linear(tier_df, tier)
                 )
             if tier in self.encode_tiers:
@@ -716,11 +726,15 @@ class TierPipeline:
             if tier in self.hist_tiers:
                 publish(f"hist_{tier}", seq_fp, lambda: self._hist(tier, sequences))
             if tier in self.metrics_tiers:
-                src = f"gapfilled_{tier}" if tier in self.gapfill_tiers else stage
+                src, src_fp = (
+                    (f"gapfilled_{tier}", gap_fp)
+                    if tier in self.gapfill_tiers
+                    else (stage, tier_fp)
+                )
                 mdf = self._read_stage(src)
                 publish(
                     f"metrics_{tier}",
-                    content_fingerprint(mdf),
+                    src_fp or content_fingerprint(mdf),
                     lambda: compute_metrics(mdf, tier),
                 )
             prev_df = tier_df

@@ -12,7 +12,26 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _size_jvm_threads(n: int) -> None:
+#: Spark conf keys whose JVM options the driver JVM starts with.
+_JAVA_OPT_KEYS = ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions")
+
+
+def _caller_java_opts(extra_conf: dict[str, str] | None) -> str:
+    """The driver JVM options a caller set through Spark conf: ``extra_conf``
+    and the ``SparkConf`` defaults, for :func:`_size_jvm_threads` to treat
+    as caller-owned."""
+    from pyspark import SparkConf
+
+    defaults = SparkConf(loadDefaults=True)
+    return " ".join(
+        v
+        for k in _JAVA_OPT_KEYS
+        for v in ((extra_conf or {}).get(k), defaults.get(k))
+        if v
+    )
+
+
+def _size_jvm_threads(n: int, caller_opts: str = "") -> None:
     """Size a local ``n``-core JVM's GC and JIT compiler threads in
     ``JAVA_TOOL_OPTIONS``.
 
@@ -27,7 +46,10 @@ def _size_jvm_threads(n: int) -> None:
     wins per group: a caller's ``CICompilerCount`` does not stop GC sizing,
     and a caller's GC thread count does not stop compiler sizing. The two
     GC flags move together, since G1 refuses ``ConcGCThreads`` above
-    ``ParallelGCThreads``."""
+    ``ParallelGCThreads``. A caller's flags count wherever they are set:
+    in ``JAVA_TOOL_OPTIONS`` or in ``caller_opts``, the driver's Spark-conf
+    JVM options (:func:`_caller_java_opts`), which the JVM applies after
+    ours."""
     import re
 
     prev = os.environ.get("JAVA_TOOL_OPTIONS", "")
@@ -39,13 +61,14 @@ def _size_jvm_threads(n: int) -> None:
     if ours:
         prev = (prev[: ours.start()] + prev[ours.end():]).strip()
     cores = min(n, len(os.sched_getaffinity(0)))
+    owned = f"{prev} {caller_opts}"
     opts = [f"-Drtsa.gc.auto={n}"]
-    if "ParallelGCThreads" not in prev and "ConcGCThreads" not in prev:
+    if "ParallelGCThreads" not in owned and "ConcGCThreads" not in owned:
         opts += [
             f"-XX:ParallelGCThreads={max(2, n)}",
             f"-XX:ConcGCThreads={max(1, n // 2)}",
         ]
-    if "CICompilerCount" not in prev:
+    if "CICompilerCount" not in owned:
         opts.append(f"-XX:CICompilerCount={1 + max(1, cores // 4)}")
     fragment = " ".join(opts)
     os.environ["JAVA_TOOL_OPTIONS"] = (
@@ -127,7 +150,7 @@ def get_spark(
         # WE launch the JVM (local mode) with an explicit core count; see
         # _size_jvm_threads for the caller-vs-auto distinction.
         if isinstance(n, int):
-            _size_jvm_threads(n)
+            _size_jvm_threads(n, _caller_java_opts(extra_conf))
     if shuffle_partitions is None:
         env_cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
         shuffle_partitions = int(env_cores)

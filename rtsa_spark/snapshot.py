@@ -65,9 +65,13 @@ from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from rtsa_spark.storage import cluster_for_publish
+from rtsa_spark.storage import (
+    cluster_for_publish,
+    fingerprint_text,
+    observe_fingerprint,
+)
 
 __all__ = ["CommitConflict", "SnapshotStore"]
 
@@ -261,19 +265,25 @@ class SnapshotStore:
                 f"input must not carry store partition columns {sorted(clash)}"
             )
 
-    def _write_version(self, df: DataFrame) -> tuple[str, list[str]]:
+    def _write_version(self, df: DataFrame) -> tuple[str, list[str], str]:
         """Append ``df`` under a fresh version id; returns
-        ``(version, months_written)``.  One job: the distinct-months
-        accounting rides the write via a post-write listing of the version's
-        own dirs (no second scan of the input)."""
+        ``(version, months_written, fingerprint)``.  One job: the
+        distinct-months accounting rides the write via a post-write listing
+        of the version's own dirs, and the content fingerprint of the
+        written rows is observed on the write (no second scan of the
+        input)."""
         ver = uuid.uuid4().hex[:12]
-        with_cols = df.withColumn(
+        with_month = df.withColumn(
             P_MONTH, F.date_format(F.col(self.ts_col), "yyyy-MM")
-        ).withColumn(V_COL, F.lit(ver))
-        # range-cluster + sort like the plain pipeline publish (V_COL is a
-        # constant, so clustering on month + keys is the whole layout)
+        )
+        # month-rebalanced sorted publish like the plain pipeline's. V_COL
+        # is a constant added above the observation: below it, the writer
+        # would no longer see it as one and sort every row again on it
+        observed, obs = observe_fingerprint(
+            cluster_for_publish(with_month, ("source", self.ts_col)), df.columns
+        )
         (
-            cluster_for_publish(with_cols, ("source", self.ts_col))
+            observed.withColumn(V_COL, F.lit(ver))
             .write.mode("append")
             .partitionBy(P_MONTH, V_COL)
             .parquet(self._data_dir)
@@ -293,7 +303,7 @@ class SnapshotStore:
                 f"input has rows with null {self.ts_col!r}; month "
                 f"partitioning is undefined for them (no commit was made)"
             )
-        return ver, months
+        return ver, months, fingerprint_text(obs.get)
 
     @contextmanager
     def _commit_lock(self):
@@ -326,7 +336,8 @@ class SnapshotStore:
         branch's history is a chain."""
         extra = dict(extra or {})
         reserved = {
-            "snapshot_id", "parent", "op", "branch", "committed_at", "months"
+            "snapshot_id", "parent", "op", "branch", "committed_at", "months",
+            "fingerprint",
         }
         bad = reserved & set(extra)
         if bad:
@@ -387,7 +398,7 @@ class SnapshotStore:
         self._validate_input(df)
         self._validate_branch(branch)
         schema_id = self._pin_schema(df)
-        ver, months = self._write_version(df)
+        ver, months, fp = self._write_version(df)
 
         def prep(parent_row):
             if expect_empty and parent_row is not None:
@@ -395,7 +406,7 @@ class SnapshotStore:
                     "branch gained a snapshot while this bootstrap publish "
                     "was writing; fold into the existing head instead"
                 )
-            return {m: ver for m in months}, {}
+            return {m: ver for m in months}, {"fingerprint": fp}
 
         return self._commit(
             "publish", prep,
@@ -425,7 +436,7 @@ class SnapshotStore:
         read_mapping = self.months()
         cur = self.read()
         schema_id = self._pin_schema(cur)
-        ver, months = self._write_version(cur)
+        ver, months, _ = self._write_version(cur)
 
         def prep(parent_row):
             parent = dict(parent_row["months"]) if parent_row else {}
@@ -442,6 +453,16 @@ class SnapshotStore:
         fast_forward) in commit order — driver-side metadata, O(commits).
         ``branch`` filters to one ref's chain."""
         return self._data_commits(branch)
+
+    def fingerprint(self, asof: int | str | None = None) -> str | None:
+        """Content fingerprint (``rows:xor-hash``, the
+        ``pipeline.content_fingerprint`` recipe) of snapshot ``asof``
+        (default: current), recorded by :meth:`publish` from its own
+        write — the snapshot-summary analog of Iceberg's
+        ``total-records``.  None for every other commit."""
+        return self._snapshot_row(
+            asof if asof is not None else self.current_snapshot()
+        ).get("fingerprint")
 
     def refresh_months(
         self,
@@ -476,7 +497,7 @@ class SnapshotStore:
         scoped = df.where(
             F.date_format(F.col(self.ts_col), "yyyy-MM").isin(months)
         )
-        ver, written = self._write_version(scoped)
+        ver, written, _ = self._write_version(scoped)
 
         def prep(parent_row):
             parent = dict(parent_row["months"]) if parent_row else {}
@@ -955,11 +976,23 @@ class SnapshotStore:
             mapping = {m: v for m, v in mapping.items() if m <= month_hi}
         if not mapping:
             return self.spark.createDataFrame([], schema)
-        dirs = [self.version_dir(m, v) for m, v in sorted(mapping.items())]
+        return self._read_versions(schema, sorted(mapping.items()))
+
+    def _read_versions(
+        self, schema: StructType, versions: list[tuple[str, str]]
+    ) -> DataFrame:
+        """Read ``(month, version)`` dirs under ``schema``.  The partition
+        columns are declared as strings, so Spark infers no partition type:
+        a version id like ``63e465427428`` would otherwise parse as the
+        decimal 63×10^465427428 and spin the driver in ``BigDecimal``."""
+        full = StructType(
+            schema.fields
+            + [StructField(P_MONTH, StringType()), StructField(V_COL, StringType())]
+        )
         return (
-            self.spark.read.schema(schema)
+            self.spark.read.schema(full)
             .option("basePath", self._data_dir)
-            .parquet(*dirs)
+            .parquet(*[self.version_dir(m, v) for m, v in versions])
             .select([f.name for f in schema.fields])
         )
 
@@ -1009,18 +1042,11 @@ class SnapshotStore:
         # any columns added between the two, so a row whose only change
         # is a backfilled new column diffs as DELETE(old,null)+INSERT(new)
         schema = self._load_schemas()[until_row.get("schema_id", 0)]
-        cols = [f.name for f in schema.fields]
 
         def _subset(mapping: dict[str, str], months_: list[str]) -> DataFrame:
             if not months_:
-                return self.spark.createDataFrame([], schema).select(cols)
-            dirs = [self.version_dir(m, mapping[m]) for m in months_]
-            return (
-                self.spark.read.schema(schema)
-                .option("basePath", self._data_dir)
-                .parquet(*dirs)
-                .select(cols)
-            )
+                return self.spark.createDataFrame([], schema)
+            return self._read_versions(schema, [(m, mapping[m]) for m in months_])
 
         changed_new = sorted(m for m in new if old.get(m) != new[m])
         changed_old = sorted(m for m in old if new.get(m) != old[m])

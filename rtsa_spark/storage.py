@@ -47,13 +47,17 @@ assertion as audit #16.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import MapType
 
 __all__ = [
     "write_bucketed",
     "read_bucketed",
     "bucket_spec",
     "cluster_for_publish",
+    "fingerprint_aggs",
+    "fingerprint_text",
+    "observe_fingerprint",
     "zorder_key",
     "cluster_zorder",
     "zorder_skip_audit",
@@ -65,36 +69,83 @@ DEFAULT_BUCKETS = 64
 def cluster_for_publish(
     df: DataFrame, order_cols: tuple[str, ...], month_col: str = "p_month"
 ) -> DataFrame:
-    """Range-cluster + sort rows ahead of a month-partitioned write —
-    the parquet-dir emulation of Iceberg's ``write.distribution-mode =
-    range`` + sort order.  Two effects that only matter once the table is
-    big, which is exactly when they dominate:
+    """Month-rebalanced sorted publish (``write.distribution-mode=hash``):
+    hash-rebalance rows on the month and sort them within each task ahead
+    of a month-partitioned write — the parquet-dir emulation of Iceberg's
+    hash distribution + sort order.  Two effects that only matter once the
+    table is big, which is exactly when they dominate:
 
     - **file-count control**: an unclustered write sprays every shuffle
       partition into every month dir (``shuffle_partitions × months``
       files per stage — the small-files explosion that kills a 100 TB
-      table's planning time).  Range partitioning on ``(month, *order)``
-      makes the month runs contiguous, so each write task lands in one
-      (boundary tasks: two) month dirs: total files ≈ shuffle partitions,
-      not the product.  Skew-safe where ``repartition(month_col)`` is
-      not — a dominant month simply spans several range partitions.
+      table's planning time).  The ``rebalance`` hint hashes each month
+      to one write task, so a task writes one file per month it holds.
+      Skew-safe where a plain ``repartition(month_col)`` is not: AQE
+      (``OptimizeSkewInRebalancePartitions``) splits an oversized month
+      across several tasks and coalesces small months into one.
     - **row-group stats**: ``sortWithinPartitions`` gives every parquet
       row group a tight ``(source, bucket_start)`` min/max envelope, so
       time-range and per-source reads prune row groups instead of
       scanning the month (the block-pruned ``read_points`` and every
       mask semi-join read benefit immediately).
 
-    Costs one extra range exchange per PUBLISH (never on the query path);
-    that is the trade every table format makes for sorted data files.
-    Columns absent from ``df`` are skipped, so one helper serves the
-    rollup (``bucket_start``), encoded (``block_day``) and histogram
-    stages alike.
+    Costs one hash exchange per PUBLISH (never on the query path).  A
+    range exchange would also run a sampling job over the exchange's
+    child, i.e. compute the whole stage twice; a hash exchange needs no
+    sample, so the layout is also deterministic.  Columns absent from
+    ``df`` are skipped, so one helper serves the rollup
+    (``bucket_start``), encoded (``block_day``) and histogram stages
+    alike.
     """
     cols = [month_col] + [c for c in order_cols if c in df.columns]
-    return df.repartitionByRange(*[F.col(c) for c in cols]).sortWithinPartitions(
-        *cols
-    )
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "true":
+        df = df.hint("rebalance", month_col)
+    else:
+        # Spark drops a rebalance hint when AQE is off; a plain hash
+        # repartition still gives each month one write task
+        df = df.repartition(month_col)
+    return df.sortWithinPartitions(*cols)
 
+
+def fingerprint_aggs(df: DataFrame, cols: list[str] | None = None) -> list:
+    """The content-fingerprint aggregates over ``cols`` of ``df`` (default:
+    every column): ``n = count(1)`` and ``x = bit_xor(xxhash64(cols))``.
+
+    ``bit_xor`` is commutative, so the pair is order- and
+    partitioning-independent and folds across any grouping (sum the
+    counts, xor the hashes).  Map-typed columns go through ``to_json``
+    (hashing maps is undefined in Spark).  The one recipe behind
+    ``pipeline.content_fingerprint``, ``pipeline.month_fingerprints`` and
+    a publish write's :func:`observe_fingerprint`."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    hashed = [
+        F.to_json(F.col(c)) if isinstance(types[c], MapType) else F.col(c)
+        for c in (df.columns if cols is None else cols)
+    ]
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*hashed)).alias("x"),
+    ]
+
+
+def fingerprint_text(row) -> str:
+    """``rows:xor-hash`` text of a :func:`fingerprint_aggs` result (an
+    empty input has no xor and reads ``0:0``)."""
+    return f"{row['n']}:{row['x'] if row['x'] is not None else 0}"
+
+
+def observe_fingerprint(
+    df: DataFrame, cols: list[str]
+) -> tuple[DataFrame, Observation]:
+    """Attach :func:`fingerprint_aggs` over ``cols`` to the action that
+    consumes ``df``: the publish write learns the content fingerprint of
+    what it writes, with no read-back scan.  Apply it last, above the
+    publish exchange and sort, so the metrics sit in the write's result
+    stage: result-task accumulators merge once per partition, so a
+    re-attempted map stage cannot double-count.  Read the value with
+    ``fingerprint_text(obs.get)`` once the write has returned."""
+    obs = Observation()
+    return df.observe(obs, *fingerprint_aggs(df, cols)), obs
 
 
 def write_bucketed(
@@ -208,8 +259,10 @@ def cluster_zorder(
     df: DataFrame, x_col: str, y_col: str, bits: int = 16
 ) -> DataFrame:
     """Z-cluster a table ahead of a file write: range-exchange + per-file
-    sort on the Morton key (the ``cluster_for_publish`` move with a
-    2-D key).  One sampled range exchange at PUBLISH time — never on the
+    sort on the Morton key (the ``cluster_for_publish`` sort with a 2-D
+    key; file envelopes on the key need contiguous key ranges per file,
+    so this one keeps a range exchange, not a hash one).  One sampled
+    range exchange at PUBLISH time — never on the
     query path — buys min/max file pruning on both dimensions for every
     later scan.  Ties broken by the raw dims so the layout is total and
     reruns byte-identical."""

@@ -71,13 +71,33 @@ def _manifest(p):
         return [json.loads(line) for line in f if line.strip()]
 
 
+def _jobs_in_group(spark, group, action):
+    """Spark jobs ``action()`` launches, counted by job group. A control
+    job in a second group is seen only after every earlier job event
+    reached the status store, so the count is not a race."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup(group, group)
+        action()
+        sc.setJobGroup(group + "-control", "control job")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(group + "-control"):
+        assert time.time() < deadline, "control job never reached the tracker"
+        time.sleep(0.1)
+    return len(tracker.getJobIdsForGroup(group))
+
+
 def test_partition_lineage_manifest(spark, tiny_sequences, tmp_path):
     """Every manifest row's ``rows`` equals an independent Spark count of
     ``read_stage(stage)`` for its month — plain, snapshot-backed and
     non-partitioned stages, after run, a month-deleting refresh and a
     compaction — and accounting a stage launches no Spark job."""
-    import time
-
     import pyspark.sql.functions as F
 
     p = TierPipeline(spark, str(tmp_path / "plin"), snapshot_tiers=("hourly",))
@@ -158,25 +178,10 @@ def test_partition_lineage_manifest(spark, tiny_sequences, tmp_path):
     }
     assert compacted["rollup_raw"][first]["n_files"] == 1
 
-    # accounting reads parquet footers only: no Spark job in its group.
-    # The control job's group is seen only after every earlier job event
-    # reached the status store, so an empty accounting group is no race.
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    # accounting reads parquet footers only: no Spark job in its group
     n_audit = len(_manifest(p))
-    try:
-        sc.setJobGroup("manifest-accounting", "manifest accounting")
-        for stage in built:
-            p._append_manifest(stage, "AUDIT")
-        sc.setJobGroup("manifest-control", "control job")
-        p.read_stage("rollup_raw").count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("manifest-control"):
-        assert time.time() < deadline, "control job never reached the tracker"
-        time.sleep(0.1)
-    assert list(tracker.getJobIdsForGroup("manifest-accounting")) == []
+    audit = lambda: [p._append_manifest(stage, "AUDIT") for stage in built]
+    assert _jobs_in_group(spark, "manifest-accounting", audit) == 0
     # the whole-stage audit still covers exactly the months each stage holds
     assert_counts(_manifest(p)[n_audit:], whole=True)
 
@@ -319,3 +324,103 @@ def test_encoded_stage_refresh_deletes_emptied_month(spark, tiny_sequences, tmp_
     )
     assert pts.count() == want.count() > 0
     assert pts.exceptAll(want).count() == 0
+
+
+# plain (raw, daily, monthly, gapfilled, metrics), snapshot-backed
+# (hourly) and encoded (snapshot-backed encoded_hourly) stages in one run
+_FP_KW = dict(encode_tiers=("hourly",), snapshot_tiers=("hourly",))
+# (stage, the stage whose content is its input fingerprint)
+_FP_PARENTS = (
+    ("rollup_hourly", "rollup_raw"),
+    ("gapfilled_hourly", "rollup_hourly"),
+    ("encoded_hourly", "rollup_hourly"),
+    ("rollup_daily", "rollup_hourly"),
+    ("gapfilled_daily", "rollup_daily"),
+    ("metrics_daily", "gapfilled_daily"),
+    ("rollup_monthly", "rollup_daily"),
+)
+
+
+def _success_rows(p):
+    return {
+        r["stage"]: (r["fingerprint"], r["rows_in"], r["rows_out"])
+        for r in p._ledger()
+        if r["status"] == "SUCCESS"
+    }
+
+
+@pytest.fixture
+def fp_calls(monkeypatch):
+    """Count ``content_fingerprint`` calls the pipeline makes."""
+    import rtsa_spark.pipeline as pipeline
+
+    calls = []
+    real = pipeline.content_fingerprint
+
+    def counted(df):
+        calls.append(1)
+        return real(df)
+
+    monkeypatch.setattr(pipeline, "content_fingerprint", counted)
+    return calls
+
+
+def test_cold_run_fingerprints_come_from_the_publish_writes(
+    spark, tiny_sequences, tmp_path, fp_calls
+):
+    """A cold run learns every published stage's content fingerprint from
+    the write that publishes it: no read-back fingerprint scan, and each
+    dependent stage's input fingerprint equals a scan of its parent."""
+    from rtsa_spark.pipeline import content_fingerprint
+
+    p = TierPipeline(spark, str(tmp_path / "cold"), **_FP_KW)
+    n_jobs = _jobs_in_group(spark, "cold-run", lambda: p.run(tiny_sequences))
+    assert fp_calls == []
+    got = _success_rows(p)
+    for stage, parent in _FP_PARENTS:
+        want = content_fingerprint(p.read_stage(parent))
+        assert got[stage][0] == want, (stage, parent)
+        assert got[stage][1] == int(want.split(":")[0])
+    # a full-table snapshot commit records the fingerprint of its write
+    for stage in ("rollup_hourly", "encoded_hourly"):
+        assert p.stage_store(stage).fingerprint() == content_fingerprint(
+            p.read_stage(stage)
+        )
+    # pinned: a range exchange (one sampling job per clustered publish)
+    # plus read-back fingerprint scans made this run launch 46 jobs
+    assert n_jobs == 29, n_jobs
+
+
+def test_resumed_run_fingerprints_equal_a_cold_run(
+    spark, tiny_sequences, tmp_path, fp_calls
+):
+    """A crash after ``gapfilled_hourly`` and a resume give the ledger
+    fingerprints of a cold run; only the stages the resume skipped and
+    builds on (raw, hourly) scan their read-back."""
+    cold = TierPipeline(spark, str(tmp_path / "cold"), **_FP_KW)
+    cold.run(tiny_sequences)
+    base = str(tmp_path / "resume")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        TierPipeline(spark, base, **_FP_KW).run(
+            tiny_sequences, fail_after="gapfilled_hourly"
+        )
+    del fp_calls[:]
+    resumed = TierPipeline(spark, base, **_FP_KW)
+    resumed.run(tiny_sequences)
+    assert len(fp_calls) == 2
+    assert _success_rows(resumed) == _success_rows(cold)
+
+
+def test_publish_refuses_an_observed_count_its_footers_disagree_with(
+    spark, tiny_sequences, tmp_path, monkeypatch
+):
+    import rtsa_spark.pipeline as pipeline
+
+    monkeypatch.setattr(pipeline, "fingerprint_text", lambda row: "1:0")
+    p = TierPipeline(
+        spark, str(tmp_path / "bad"), tiers=["raw"], gapfill_tiers=(),
+        metrics_tiers=(),
+    )
+    with pytest.raises(RuntimeError, match="parquet footers count"):
+        p.run(tiny_sequences)
+    assert p._ledger() == []

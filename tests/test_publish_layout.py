@@ -1,6 +1,7 @@
-"""Publish layout: range-clustered + sorted tier files.
+"""Publish layout: month-rebalanced sorted publish
+(``write.distribution-mode=hash``) of tier files.
 
-The pipeline's writes emulate Iceberg's ``write.distribution-mode=range``
+The pipeline's writes emulate Iceberg's ``write.distribution-mode=hash``
 + sort order (rtsa_spark/storage.py::cluster_for_publish): without it, a
 month-partitioned write sprays every shuffle partition into every month
 dir (shuffle_partitions x months files) and parquet row groups carry

@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from rtsa_spark.session import _size_jvm_threads
+from rtsa_spark.session import _caller_java_opts, _size_jvm_threads
 
 
 @pytest.fixture
@@ -102,6 +102,36 @@ def test_caller_options_around_ours_survive_resize(jto_env):
     assert "-XX:MaxMetaspaceSize=512m" in v
     assert "-XX:ParallelGCThreads=8" in v
     assert "ParallelGCThreads=4" not in v
+
+
+def test_spark_conf_thread_flags_are_caller_owned(jto_env):
+    # a caller's -XX:ParallelGCThreads=1 in spark.driver.extraJavaOptions
+    # plus our ConcGCThreads=2 made the JVM refuse to start
+    # ("ConcGCThreads (2) must be less than or equal to ParallelGCThreads")
+    os.environ.pop("JAVA_TOOL_OPTIONS", None)
+    conf = {"spark.driver.extraJavaOptions": "-Xss4m -XX:ParallelGCThreads=1"}
+    assert "-XX:ParallelGCThreads=1" in _caller_java_opts(conf)
+    _size_jvm_threads(4, _caller_java_opts(conf))
+    v = os.environ["JAVA_TOOL_OPTIONS"]
+    assert "GCThreads" not in v
+    assert "-XX:CICompilerCount=2" in v
+    # per group: a compiler count in the defaults keeps GC sizing
+    os.environ.pop("JAVA_TOOL_OPTIONS", None)
+    conf = {"spark.driver.defaultJavaOptions": "-XX:CICompilerCount=4"}
+    _size_jvm_threads(4, _caller_java_opts(conf))
+    v = os.environ["JAVA_TOOL_OPTIONS"]
+    assert "CICompilerCount" not in v
+    assert "-XX:ParallelGCThreads=4 -XX:ConcGCThreads=2" in v
+
+
+def test_conf_options_without_thread_flags_keep_the_fragment(jto_env):
+    os.environ.pop("JAVA_TOOL_OPTIONS", None)
+    _size_jvm_threads(4)
+    bare = os.environ["JAVA_TOOL_OPTIONS"]
+    os.environ.pop("JAVA_TOOL_OPTIONS", None)
+    conf = {"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/w/tmp -XX:-UsePerfData"}
+    _size_jvm_threads(4, _caller_java_opts(conf))
+    assert os.environ["JAVA_TOOL_OPTIONS"] == bare
 
 
 @pytest.mark.parametrize("n", [1, 2])

@@ -987,3 +987,37 @@ def test_model_based_random_walk(spark, tier, tmp_path):
         assert _totals(st.read(asof=probe)) == history[probe], (
             f"step {step} asof {probe}"
         )
+
+
+def test_numeric_looking_version_id_reads_back(spark, tier, tmp_path, monkeypatch):
+    """A version id like ``63e465427428`` parses as a decimal with a huge
+    exponent; left to partition-type inference, the read spun the driver
+    in ``BigDecimal`` for as long as the process ran. The store declares
+    its partition columns as strings, so the read is quick."""
+    import threading
+    import types
+    import uuid
+
+    ids = iter(["63e465427428", "12e345678901"])
+    monkeypatch.setattr(
+        uuid, "uuid4", lambda: types.SimpleNamespace(hex=next(ids) + "0" * 20)
+    )
+    st = SnapshotStore(spark, str(tmp_path / "st"))
+    st.publish(tier)
+    feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
+    st.refresh_months(tier.where(feb), ["2024-02"])
+    monkeypatch.undo()
+    assert set(st.months().values()) == {"63e465427428", "12e345678901"}
+    got = {}
+
+    def read():
+        got["current"] = _totals(st.read())
+        got["changes"] = st.read_changes(1).count()
+
+    # bounded in a thread, so a regression fails here instead of hanging
+    # the session
+    t = threading.Thread(target=read, daemon=True)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "snapshot read hung on a numeric-looking version id"
+    assert got == {"current": _totals(tier), "changes": 0}

@@ -255,3 +255,33 @@ def test_cluster_zorder_roundtrip_and_order(spark, tmp_path):
         byf.setdefault(r["f"], []).append(r["zk"])
     for zks in byf.values():
         assert zks == sorted(zks)
+
+
+def test_cluster_for_publish_hash_distributes_months(spark, tiny_sequences):
+    """The publish exchange hashes on the month (no range exchange, so no
+    sampling job): a rebalance under AQE, which can split a skewed month,
+    and a plain hash repartition without AQE, where Spark would drop the
+    rebalance hint and the write would spray every partition into every
+    month dir."""
+    from rtsa_spark.storage import cluster_for_publish
+
+    hourly = rollup_ladder(tiny_sequences)["hourly"].withColumn(
+        "p_month", F.date_format("bucket_start", "yyyy-MM")
+    )
+
+    def plan():
+        return _plan(cluster_for_publish(hourly, ("source", "bucket_start")))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        on = plan()
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        off = plan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert "REBALANCE_PARTITIONS_BY_COL" in on
+    assert "REPARTITION_BY_COL" in off
+    for p in (on, off):
+        assert "hashpartitioning(p_month" in p
+        assert "rangepartitioning" not in p

@@ -16,6 +16,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -650,27 +651,44 @@ def _audit(tmp: str) -> int:
         and "EvalPython" not in up_plan,
     )
 
-    # 23. publish clustering: the pre-write frame is range-partitioned on
-    #     (month, source, bucket_start) with an in-partition sort — the
-    #     Iceberg write.distribution-mode=range shape that bounds files
-    #     per month and gives tight row-group stats (storage.py)
-    from rtsa_spark.storage import cluster_for_publish
+    # 23. publish clustering: the pre-write frame is hash-rebalanced on
+    #     the month with an in-partition (month, source, bucket_start)
+    #     sort, and the write's fingerprint observation sits above that
+    #     sort — the Iceberg write.distribution-mode=hash shape that bounds
+    #     files per month, gives tight row-group stats and runs no
+    #     range-sampling job (storage.py)
+    from rtsa_spark.storage import cluster_for_publish, observe_fingerprint
 
-    pub = cluster_for_publish(
-        hr_a.withColumn(
-            "p_month", F.date_format("bucket_start", "yyyy-MM")
-        ),
-        ("source", "bucket_start"),
-    )
-    pub_plan = plan_of(pub)
+    # (the rebalance hint needs AQE, which the pipeline's sessions run
+    # with; this audit's session turns it off)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        pub, _obs = observe_fingerprint(
+            cluster_for_publish(
+                hr_a.withColumn(
+                    "p_month", F.date_format("bucket_start", "yyyy-MM")
+                ),
+                ("source", "bucket_start"),
+            ),
+            hr_a.columns,
+        )
+        pub_plan = plan_of(pub)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    tree = pub_plan.split("\n\n")[0]
     ok &= check(
-        "publish clustering: rangepartitioning + local sort, no global sort",
-        "rangepartitioning(p_month" in pub_plan
+        "publish clustering: month rebalance + local sort under the "
+        "fingerprint observation, no range exchange, no global sort",
+        pub_plan.count("REBALANCE_PARTITIONS_BY_COL") == 1
+        and "hashpartitioning(p_month" in pub_plan
+        and "rangepartitioning" not in pub_plan
         # formatted explain: a LOCAL sort's args end ", false, 0"; a
-        # global sort would print ", true, 0" (and a 2nd range exchange)
+        # global sort would print ", true, 0"
         and ", false, 0" in pub_plan
         and ", true, 0" not in pub_plan
-        and pub_plan.count("rangepartitioning") == 1,
+        # tree lines: CollectMetrics directly above the Sort
+        and re.search(r"CollectMetrics[^\n]*\n\s*\+- (\* )?Sort", tree)
+        is not None,
     )
 
     # 24. DSIR (r6 shape): ONE feature explode total (the model pass);
