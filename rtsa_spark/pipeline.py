@@ -19,8 +19,10 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
   ``encoded_<tier>`` — month-partitioned on ``block_day``; blocks are
   calendar-month groups by construction, so late-data refreshes re-encode
   only the affected months' partitions like the tiers themselves;
-- a stage is SKIPPED on re-run when a SUCCESS or REFRESH lineage row
-  exists whose input fingerprint matches. The fingerprint is a CONTENT hash
+- one ladder walk serves ``run()`` and every month-scoped refresh, and
+  SKIPS a stage when it exists and its LATEST lineage row carries the
+  stage's input fingerprint (an older matching row says nothing about
+  what a later refresh left behind). The fingerprint is a CONTENT hash
   (``count:bit_xor(xxhash64(*cols))``, order-independent) — a corrected
   input with the same row count no longer silently skips recomputation.
   A published stage's own fingerprint, the input of the stages built on
@@ -112,10 +114,10 @@ def _time_col(df: DataFrame) -> str | None:
     return None
 
 
-def _rollup(tier: str, seq: DataFrame, finer: DataFrame | None) -> DataFrame:
+def _rollup(tier: str, finer: DataFrame) -> DataFrame:
     """The rollup cascade: the raw tier from sequences, every coarser tier
     from the finer one."""
-    return rollup_raw(seq) if tier == "raw" else rollup_next(finer, tier)
+    return rollup_raw(finer) if tier == "raw" else rollup_next(finer, tier)
 
 
 def content_fingerprint(df: DataFrame) -> str:
@@ -327,12 +329,17 @@ class TierPipeline:
             .orderBy("stage", "p_month")
         )
 
-    def _completed(self, stage: str, fingerprint: str) -> bool:
-        return any(
-            r["stage"] == stage
-            and r["status"] in ("SUCCESS", "REFRESH")
-            and r["fingerprint"] == fingerprint
-            for r in self._ledger()
+    def _is_current(self, stage: str, fingerprint: str) -> bool:
+        """The walk's skip rule: ``stage``'s LATEST ledger row carries
+        ``fingerprint`` and the stage exists.  ``_stage_exists``, not
+        ``os.path.exists``: a snapshot-backed stage's dir exists as soon
+        as its store object is built, with no committed snapshot
+        behind it."""
+        rows = [r for r in self._ledger() if r["stage"] == stage]
+        return (
+            bool(rows)
+            and rows[-1]["fingerprint"] == fingerprint
+            and self._stage_exists(stage)
         )
 
     # ------------------------------------------------------------ stages
@@ -366,23 +373,17 @@ class TierPipeline:
             return self._store(stage).current_snapshot() is not None
         return os.path.exists(self._stage_path(stage))
 
-    def _read_stage(self, stage: str) -> DataFrame:
-        if self._is_snapshot_stage(stage):
-            return self._store(stage).read()
-        df = self.spark.read.parquet(self._stage_path(stage))
-        return df.drop(P_MONTH) if P_MONTH in df.columns else df
-
-    def _read_stage_months(self, stage: str, months: list[str]) -> DataFrame:
-        """Month-filtered stage read: partition-pruned on ``p_month`` for
-        plain stages; snapshot stages restrict the manifest listing to the
-        requested months (pruned at the dir level, not post-hoc)."""
+    def _read_stage(self, stage: str, months: list[str] | None = None) -> DataFrame:
+        """A stage's current content, or only ``months`` of it:
+        partition-pruned on ``p_month`` for plain stages; snapshot stages
+        restrict the manifest listing to the requested months (pruned at
+        the dir level, not post-hoc)."""
         if self._is_snapshot_stage(stage):
             return self._store(stage).read(months=months)
-        return (
-            self.spark.read.parquet(self._stage_path(stage))
-            .where(F.col(P_MONTH).isin(months))
-            .drop(P_MONTH)
-        )
+        df = self.spark.read.parquet(self._stage_path(stage))
+        if months is not None:
+            df = df.where(F.col(P_MONTH).isin(months))
+        return df.drop(P_MONTH) if P_MONTH in df.columns else df
 
     def read_stage(
         self,
@@ -562,19 +563,22 @@ class TierPipeline:
         return written
 
     def _refresh_stage(
-        self,
-        stage: str,
-        df: DataFrame,
-        months: list[str],
-        fingerprint: str,
-        rows_in: int | None = None,
-    ) -> None:
+        self, stage: str, df: DataFrame, months: list[str], fingerprint: str
+    ) -> int | None:
         """REFRESH twin of :meth:`_write_stage`: swap only ``months`` of a
         published stage for ``df``'s rows — a month-scoped snapshot commit
         on a snapshot-backed stage, a dynamic partition overwrite on a
         plain one — then account those months and append the stage's
-        REFRESH ledger row."""
+        REFRESH ledger row.  Returns a rollup stage's recomputed row count
+        (its ``rows_in``), None for other stages."""
         t0 = time.time()
+        rows_in = None
+        if stage.startswith("rollup_"):
+            # the recomputed plan is consumed by the count, the write, and
+            # (plain path) the distinct-months probe — persist once so the
+            # aggregation DAG runs once, not three times
+            df = df.persist()
+            rows_in = df.count()
         snap = {}
         if self._is_snapshot_stage(stage):
             st = self._store(stage)
@@ -599,6 +603,9 @@ class TierPipeline:
                 **snap,
             }
         )
+        if rows_in is not None:
+            df.unpersist()
+        return rows_in
 
     def _overwrite_months(
         self, stage: str, df: DataFrame, months: list[str]
@@ -657,12 +664,7 @@ class TierPipeline:
             None,
         )
         if finer and self._stage_exists(finer):
-            return merge_token_histograms(
-                self._read_stage(finer)
-                if months is None
-                else self._read_stage_months(finer, months),
-                tier,
-            )
+            return merge_token_histograms(self._read_stage(finer, months), tier)
         return token_histogram(seq, tier, top_k=self.hist_top_k)
 
     def run(self, sequences: DataFrame, fail_after: str | None = None) -> dict[str, str]:
@@ -670,81 +672,12 @@ class TierPipeline:
         a crash right after the named stage commits — or is found already
         committed — for any stage the run publishes: rollup, gapfilled,
         encoded, hist or metrics (resume testing)."""
-        out: dict[str, str] = {}
-
-        def publish(stage: str, fp: str, build) -> str | None:
-            # skip a stage whose input fingerprint already committed;
-            # _stage_exists, not os.path.exists: a snapshot-backed stage's
-            # dir exists as soon as its store object is built, with no
-            # committed snapshot behind it. Returns the content fingerprint
-            # the publish write observed, None for a skipped stage.
-            written = None
-            if not (self._completed(stage, fp) and self._stage_exists(stage)):
-                written = self._write_stage(stage, build(), fp)
-            out[stage] = self._stage_path(stage)
-            if fail_after == stage:
-                raise RuntimeError(f"injected failure after {stage}")
-            return written
-
-        prev_df: DataFrame | None = None
         # month-grain fingerprints combine into the global one (same single
         # scan), and publishing them is what lets refresh_changed() detect
         # late data without the caller naming months
-        seq_months = month_fingerprints(sequences)
-        if not seq_months:
-            # an all-empty input is almost always an upstream accident (a
-            # bad join, a wrong path); publishing it would wipe every tier.
-            # Refuse loudly — tearing down a table is an explicit rm of the
-            # base dir, never a side effect of a run.
-            raise ValueError(
-                "input is empty; refusing to publish empty tiers — remove "
-                "the base dir explicitly to tear the table down"
-            )
-        prev_fp = combine_month_fingerprints(seq_months)
-        seq_fp = prev_fp
-        for tier in self.tiers:
-            stage = f"rollup_{tier}"
-            written = publish(
-                stage, prev_fp, lambda: _rollup(tier, sequences, prev_df)
-            )
-            tier_df = self._read_stage(stage)
-            # one fingerprint per tier, shared by every dependent stage
-            # (gapfill / encode / next-tier completion check): the one its
-            # publish observed, or one read-back scan of a skipped stage
-            tier_fp = written or content_fingerprint(tier_df)
-            gap_fp = None
-            if tier in self.gapfill_tiers:
-                gap_fp = publish(
-                    f"gapfilled_{tier}", tier_fp, lambda: gapfill_linear(tier_df, tier)
-                )
-            if tier in self.encode_tiers:
-                publish(
-                    f"encoded_{tier}",
-                    tier_fp,
-                    lambda: encode_tier(tier_df, value_col=self.encode_value_col),
-                )
-            if tier in self.hist_tiers:
-                publish(f"hist_{tier}", seq_fp, lambda: self._hist(tier, sequences))
-            if tier in self.metrics_tiers:
-                src, src_fp = (
-                    (f"gapfilled_{tier}", gap_fp)
-                    if tier in self.gapfill_tiers
-                    else (stage, tier_fp)
-                )
-                mdf = self._read_stage(src)
-                publish(
-                    f"metrics_{tier}",
-                    src_fp or content_fingerprint(mdf),
-                    lambda: compute_metrics(mdf, tier),
-                )
-            prev_df = tier_df
-            prev_fp = tier_fp
-        # published-input month map, written only once every stage is
-        # committed: a crash mid-run leaves the previous map, so a later
-        # refresh_changed() at worst re-refreshes months run() already
-        # rebuilt (idempotent), never misses one
-        self._write_input_months(seq_months)
-        return out
+        return self._walk(
+            sequences, month_fingerprints(sequences), fail_after=fail_after
+        )
 
     def lineage(self) -> DataFrame:
         """Ledger as a DataFrame (the `lineage` table of SURVEY.md §7.0)."""
@@ -803,7 +736,7 @@ class TierPipeline:
         months = sorted(set(diff["changed"] + diff["added"] + diff["removed"]))
         if not months:
             return {}
-        return self._refresh(sequences, months, seq_months)
+        return self._walk(sequences, seq_months, months)
 
     def sync(self, sequences: DataFrame) -> dict:
         """Make the published tiers match ``sequences`` with the cheapest
@@ -812,12 +745,15 @@ class TierPipeline:
         changed:
 
         - never published (no input month map): full :meth:`run` —
-          which itself resumes past any stage whose content fingerprint
-          already matches, so re-``sync`` of a pre-month-map base costs
-          one fingerprint scan per stage, then records the map;
+          which itself resumes past any stage whose latest ledger row
+          carries its input fingerprint, so re-``sync`` of a
+          pre-month-map base costs one fingerprint scan per tier, then
+          records the map;
         - published: :meth:`detect_changed_months` diff, then
           :meth:`refresh_changed` over exactly the changed/added/removed
-          months (empty no-op when the input is unchanged).
+          months (empty no-op when the input is unchanged).  The refresh
+          walks the ladder with :meth:`run`'s skip rule, so a stage whose
+          input a refresh left unchanged is not rewritten.
 
         Returns ``{"mode": "run", "stages": {...}}`` or ``{"mode":
         "refresh", "replaced": {stage: rows}}``.  Cost is O(changed
@@ -839,17 +775,18 @@ class TierPipeline:
         parquet emulation of Iceberg ``overwritePartitions`` — or a
         month-scoped commit on a snapshot-backed stage); all other
         partition dirs are left byte-identical on disk (asserted in
-        tests/test_refresh.py).  Downstream gapfill/metrics stages are then
-        recomputed whole from the refreshed tiers (they are tier-sized, and
-        their window/per-source semantics span month boundaries, so partial
-        recompute would be incorrect) — this also closes the staleness hole
-        where a refresh left derived stages behind a matching fingerprint.
+        tests/test_refresh.py).  Gapfill/metrics stages whose input tier
+        changed are rebuilt whole (their window/per-source semantics span
+        month boundaries, so a partial recompute would be incorrect).
 
-        Each month-scoped stage appends a REFRESH ledger row, each rebuilt
-        one a SUCCESS row, all with the post-refresh input fingerprints, so
-        a subsequent ``run(corrected)`` skips every stage.
+        A stage is skipped, as in :meth:`run`, when its latest ledger row
+        already carries its post-refresh input fingerprint: refreshing an
+        unchanged input appends no ledger row and writes no file.  Each
+        month-scoped stage appends a REFRESH ledger row, each rebuilt one
+        a SUCCESS row, so a subsequent ``run(corrected)`` skips every
+        stage, and a ``run()`` over any other input rebuilds them.
 
-        Returns {stage: rows_replaced}.
+        Returns {stage: rows_replaced} of the committed stages.
         """
         if not months or not all(
             isinstance(m, str) and _MONTH_RE.fullmatch(m) for m in months
@@ -858,125 +795,146 @@ class TierPipeline:
                 f"months must be a non-empty list of 'YYYY-MM' strings; "
                 f"got {months!r}"
             )
-        return self._refresh(sequences, months, month_fingerprints(sequences))
+        return self._walk(sequences, month_fingerprints(sequences), months)
 
-    def _refresh(
-        self, sequences: DataFrame, months: list[str], seq_months: dict[str, str]
-    ) -> dict[str, int]:
-        """Body of :meth:`refresh_months`, given the input's month map."""
-        # Partition-scoped overwrite presupposes a prior full publish: a
-        # missing tier dir would make _overwrite_months create a dir holding
-        # ONLY the refreshed months while the ledger records the full-input
-        # fingerprint, so run() would skip the rebuild forever. Fail loudly
-        # instead (derived encode/hist stages fall back to a full build
-        # below — they may legitimately be enabled after the first run()).
-        missing = [
-            f"rollup_{t}"
-            for t in self.tiers
-            if not self._stage_exists(f"rollup_{t}")
-        ]
-        if missing:
-            raise ValueError(
-                f"refresh_months requires a completed run() first; missing "
-                f"stage dirs: {missing}"
-            )
+    def _walk(
+        self,
+        sequences: DataFrame,
+        seq_months: dict[str, str],
+        months: list[str] | None = None,
+        fail_after: str | None = None,
+    ) -> dict:
+        """The one ladder walk: :meth:`run` when ``months`` is None, a
+        refresh of ``months`` otherwise; ``seq_months`` is the input's
+        month map.  Every stage goes through one commit decision:
+
+        - SKIP when it exists and its latest ledger row carries this input
+          fingerprint (:meth:`_is_current`);
+        - month-scoped :meth:`_refresh_stage` when ``months`` is given and
+          the stage is month-partitioned by construction (rollup, hist,
+          encoded) and already published;
+        - full :meth:`_write_stage` otherwise: every stage of a cold run;
+          gapfill and metrics stages, whose window and per-source
+          semantics span month boundaries; a stage enabled after the
+          first run, which has no months to swap (a partial publish under
+          the full fingerprint would hide its other months from run()).
+
+        Returns ``{stage: path}`` of every stage in run mode, ``{stage:
+        rows_replaced}`` of the committed stages in refresh mode."""
         if not seq_months:
-            # same rail as run(): an all-empty "correction" deleting every
-            # published month is an upstream accident, not a refresh. A
-            # correction that empties SOME months (rows elsewhere) still
-            # deletes exactly those months, as tested.
+            # almost always an upstream accident (a bad join, a wrong path):
+            # publishing it would wipe every tier, refreshing with it delete
+            # every published month. A correction that empties SOME months
+            # (rows elsewhere) still deletes exactly those months.
             raise ValueError(
-                "corrected input is empty; refusing a refresh that would "
-                "delete every published month — remove the base dir "
-                "explicitly to tear the table down"
+                "input is empty; refusing to publish empty tiers or delete "
+                "every published month — remove the base dir explicitly to "
+                "tear the table down"
             )
         seq_fp = combine_month_fingerprints(seq_months)
-        # The published month map with ONLY the refreshed months replaced
-        # (not the whole new map): if the caller named a subset of the
-        # months that really changed, the others keep their old published
-        # fingerprint and detect_changed_months still flags them later.
-        # It also gives the TRUTHFUL post-refresh fingerprint: recording
-        # seq_fp (the full corrected input) on a SUBSET refresh would make
-        # a later run(corrected) skip stages whose other months are stale.
-        published = self._read_input_months()
-        month_map = {
-            m: fp for m, fp in (published or {}).items() if m not in months
-        }
-        month_map.update({m: fp for m, fp in seq_months.items() if m in months})
-        # a pre-month-map table: the full input is the best available
-        prev_fp = truthful_fp = (
-            combine_month_fingerprints(month_map) if published else seq_fp
-        )
-        affected_seq = sequences.where(
-            F.date_format(F.col("ts"), "yyyy-MM").isin(months)
-        )
+        month_map, map_fp = seq_months, seq_fp
+        if months is not None:
+            # a missing tier would be created holding ONLY the refreshed
+            # months under the full-input fingerprint, and run() would skip
+            # its rebuild forever
+            missing = [
+                f"rollup_{t}" for t in self.tiers
+                if not self._stage_exists(f"rollup_{t}")
+            ]
+            if missing:
+                raise ValueError(
+                    f"refresh_months requires a completed run() first; "
+                    f"missing stage dirs: {missing}"
+                )
+            # the published map with ONLY the refreshed months replaced: if
+            # the caller named a subset of the months that really changed,
+            # the others keep their old fingerprint, so detect_changed_months
+            # still flags them and a later run(corrected) rebuilds them
+            published = self._read_input_months() or {}
+            month_map = {m: fp for m, fp in published.items() if m not in months}
+            month_map.update({m: seq_months[m] for m in months if m in seq_months})
+            if published:  # a pre-month-map table keeps the full input's
+                map_fp = combine_month_fingerprints(month_map)
+        out: dict[str, str] = {}
         replaced: dict[str, int] = {}
 
-        def refresh_derived(stage: str, build, fp: str, full_fp: str) -> None:
-            # a stage enabled after the original run() has no months to
-            # swap: a partial publish under the full fingerprint would hide
-            # every other month from run(), so build the whole stage
-            if self._stage_exists(stage):
-                self._refresh_stage(stage, build(months), months, fp)
-            else:
-                self._write_stage(stage, build(None), full_fp)
-            replaced[stage] = -1  # partition-scoped; rows in the ledger
+        def commit(stage, fp, build, scoped=False, full_fp=None):
+            # build(ms) is the stage's frame over months ms (None: whole);
+            # returns the fingerprint a full write observed, else None
+            written = None
+            if not self._is_current(stage, fp):
+                if scoped and months is not None and self._stage_exists(stage):
+                    rows = self._refresh_stage(stage, build(months), months, fp)
+                    replaced[stage] = -1 if rows is None else rows
+                else:
+                    written = self._write_stage(stage, build(None), full_fp or fp)
+                    replaced[stage] = -1 if scoped else 0
+            out[stage] = self._stage_path(stage)
+            if fail_after == stage:
+                raise RuntimeError(f"injected failure after {stage}")
+            return written
 
-        prev_recomputed: DataFrame | None = None
+        def rows_of(stage, whole):
+            # a stage's whole in-hand frame, or its published months ms
+            return lambda ms: whole if ms is None else self._read_stage(stage, ms)
+
+        def input_rows(ms):
+            month = F.date_format(F.col("ts"), "yyyy-MM")
+            return sequences if ms is None else sequences.where(month.isin(ms))
+
+        finer, prev_fp = input_rows, map_fp
         for tier in self.tiers:
             stage = f"rollup_{tier}"
-            # the recomputed plan is consumed by the count, the write, and
-            # (plain path) the distinct-months probe — persist once so the
-            # aggregation DAG runs once, not three times
-            recomputed = _rollup(tier, affected_seq, prev_recomputed).persist()
-            replaced[stage] = recomputed.count()
-            self._refresh_stage(
-                stage, recomputed, months, prev_fp, rows_in=replaced[stage]
+            written = commit(
+                stage, prev_fp, lambda ms: _rollup(tier, finer(ms)), scoped=True
             )
-            recomputed.unpersist()
-
-            if tier in self.hist_tiers:
-                refresh_derived(
-                    f"hist_{tier}",
-                    lambda ms: self._hist(
-                        tier, sequences if ms is None else affected_seq, ms
-                    ),
-                    truthful_fp,
-                    seq_fp,
-                )
             tier_df = self._read_stage(stage)
-            tier_fp = content_fingerprint(tier_df)
+            # one fingerprint per tier, shared by every stage built on it:
+            # the one its full publish observed, or one read-back scan of a
+            # skipped or month-refreshed tier
+            tier_fp = written or content_fingerprint(tier_df)
+            tier_rows = rows_of(stage, tier_df)
+            gap_fp = None
             if tier in self.gapfill_tiers:
-                self._write_stage(
-                    f"gapfilled_{tier}", gapfill_linear(tier_df, tier), tier_fp
+                gap_fp = commit(
+                    f"gapfilled_{tier}",
+                    tier_fp,
+                    lambda ms: gapfill_linear(tier_df, tier),
                 )
-                replaced[f"gapfilled_{tier}"] = 0
             if tier in self.encode_tiers:
-                # blocks are month-scoped by construction, so the encoded
-                # stage refreshes partition-scoped like the tiers
-                refresh_derived(
+                # blocks are calendar-month groups, so encoded stages
+                # refresh month-scoped like the tiers
+                commit(
                     f"encoded_{tier}",
+                    tier_fp,
                     lambda ms: encode_tier(
-                        tier_df if ms is None else self._read_stage_months(stage, ms),
-                        value_col=self.encode_value_col,
+                        tier_rows(ms), value_col=self.encode_value_col
                     ),
-                    tier_fp,
-                    tier_fp,
+                    scoped=True,
+                )
+            if tier in self.hist_tiers:
+                commit(
+                    f"hist_{tier}",
+                    map_fp,
+                    lambda ms: self._hist(tier, input_rows(ms), ms),
+                    scoped=True,
+                    full_fp=seq_fp,
                 )
             if tier in self.metrics_tiers:
-                src = f"gapfilled_{tier}" if tier in self.gapfill_tiers else stage
-                mdf = self._read_stage(src)
-                self._write_stage(
+                gapfilled = tier in self.gapfill_tiers
+                mdf = self._read_stage(f"gapfilled_{tier}" if gapfilled else stage)
+                src_fp = gap_fp if gapfilled else tier_fp
+                commit(
                     f"metrics_{tier}",
-                    compute_metrics(mdf, tier),
-                    content_fingerprint(mdf),
+                    src_fp or content_fingerprint(mdf),
+                    lambda ms: compute_metrics(mdf, tier),
                 )
-                replaced[f"metrics_{tier}"] = 0
-
-            prev_recomputed = self._read_stage_months(stage, months)
-            prev_fp = tier_fp
+            finer, prev_fp = tier_rows, tier_fp
+        # written only once every stage is committed: a crash mid-walk
+        # leaves the previous map, so a later refresh_changed() at worst
+        # re-refreshes months already rebuilt (idempotent), never misses one
         self._write_input_months(month_map)
-        return replaced
+        return out if months is None else replaced
 
     # ------------------------------------------------- file maintenance
     def compact_stage(

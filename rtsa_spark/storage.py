@@ -1,59 +1,35 @@
-"""Bucketed tier tables: the co-location layout for 100 TB tier joins.
+"""Physical layout of published tiers: publish clustering, the content
+fingerprint recipe, and z-order clustering.
 
-Every tier, mask, and analytics table in this engine is keyed by
-``source`` — the mask semi-joins (operators/masks.py), the tier-match
-audit, the phase-band broadcast-back, and every per-source aggregation
-shuffle on it.  At production scale those shuffles dominate: a daily tier
-of 10^12 raw rows re-hashed for every downstream join is the single
-largest avoidable cost in the pipeline.
+- :func:`cluster_for_publish` is the month-rebalanced sorted publish
+  (``write.distribution-mode=hash``) every month-partitioned stage of
+  :class:`rtsa_spark.pipeline.TierPipeline` and
+  :class:`rtsa_spark.snapshot.SnapshotStore` writes through: one write
+  task per month and tight ``(source, time)`` row-group envelopes, so
+  time-range and per-source reads prune row groups.
+- :func:`fingerprint_aggs` / :func:`fingerprint_text` are the one
+  order-independent content-hash recipe (``count:bit_xor(xxhash64)``)
+  behind the pipeline's stage fingerprints, and
+  :func:`observe_fingerprint` attaches it to a publish write so the
+  fingerprint of what was written needs no read-back scan.
+- :func:`zorder_key` / :func:`cluster_zorder` cluster a table on a
+  two-dimensional Morton key, and :func:`zorder_skip_audit` measures the
+  files a box predicate scans under the linear and the z-order layout.
 
-``write_bucketed`` persists a tier as a Spark **bucketed table**
-(``bucketBy(n, "source")`` + per-file ``sortBy``): the hash-partitioning
-is baked into the file layout once at write time, so every later
-source-keyed join between two co-bucketed tiers and every
-``groupBy("source")`` aggregation reads the layout instead of
-shuffling — Catalyst plans a SortMergeJoin / HashAggregate with **no
-Exchange** on the bucketed side(s).  This is the parquet-native analog of
-the reference's single-machine locality (the whole rts brick lives in
-one R process, ``/root/reference/R/rtsa.stl.R:441-489``): here the
-locality is per-bucket, and 1000 executors each own buckets instead of
-one process owning everything.
-
-Operational contract:
-
-- **Same bucket count across tiers that join.** Spark avoids the shuffle
-  when both sides agree (or one is a multiple, with
-  ``spark.sql.bucketing.coalesceBucketsInJoin.enabled``).  Pick the
-  count once per deployment (default 64; at 100 TB size it so one
-  bucket of the RAW tier fits an executor — e.g. 4096) and pass the
-  same value everywhere; ``read_bucketed`` exposes the table's count so
-  callers can assert agreement.
-- Bucketed writes require the table catalog (``saveAsTable``); plain
-  ``.parquet(path)`` cannot carry bucket metadata.  The in-memory /
-  Derby catalog in local mode and any Hive/Glue/Unity catalog in
-  production both work; pass ``path=...`` to keep the data external.
-- ``sortBy`` the time column: per-file ordering turns the downstream
-  SortMergeJoin sort and every window-over-(source, time) into a cheap
-  near-sorted pass, and parquet min/max row-group pruning on time
-  ranges gets tight for free.
-
-Verification: tests/test_storage.py writes two co-bucketed tiers and
-asserts (a) read-back content equality, (b) the source-keyed join plan
-contains no shuffle Exchange, (c) ``groupBy(source)`` aggregation plans
-with no Exchange; tools/explain_audit.py carries the same no-Exchange
-assertion as audit #16.
+The reference keeps a whole rts brick in one R process
+(``/root/reference/R/rtsa.stl.R:441-489``) and has no file layout; these
+are the engine's own, verified by tests/test_storage.py and
+``tools/explain_audit.py`` (#23 pins the publish exchange, #26 the
+z-order range exchange).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql.types import MapType
 
 __all__ = [
-    "write_bucketed",
-    "read_bucketed",
-    "bucket_spec",
     "cluster_for_publish",
     "fingerprint_aggs",
     "fingerprint_text",
@@ -62,8 +38,6 @@ __all__ = [
     "cluster_zorder",
     "zorder_skip_audit",
 ]
-
-DEFAULT_BUCKETS = 64
 
 
 def cluster_for_publish(
@@ -146,56 +120,6 @@ def observe_fingerprint(
     ``fingerprint_text(obs.get)`` once the write has returned."""
     obs = Observation()
     return df.observe(obs, *fingerprint_aggs(df, cols)), obs
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    bucket_col: str = "source",
-    sort_col: str | None = "bucket_start",
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally external) table.
-
-    ``n_buckets`` must match across every table this one will join
-    bucket-to-bucket; see the module docstring for sizing guidance.
-    """
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    writer = df.write.mode(mode).format("parquet").bucketBy(
-        n_buckets, bucket_col
-    )
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back (the bucket layout rides along in the
-    catalog metadata — a plain ``spark.table`` keeps it)."""
-    return spark.table(table)
-
-
-def bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str]]:
-    """Return ``(n_buckets, bucket_columns)`` for a catalog table, so
-    pipelines can assert co-bucketing before relying on shuffle-free
-    joins (0, [] when the table is not bucketed)."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    n, cols = 0, []
-    for r in rows:
-        if r["col_name"] == "Num Buckets":
-            n = int(r["data_type"])
-        elif r["col_name"] == "Bucket Columns":
-            cols = [
-                c.strip().strip("`")
-                for c in r["data_type"].strip("[]").split(",")
-                if c.strip()
-            ]
-    return n, cols
 
 
 # --------------------------------------------------------------- z-order

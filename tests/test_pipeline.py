@@ -199,7 +199,14 @@ def test_partition_lineage_refresh_scoped(spark, tiny_sequences, tmp_path):
     month = tiny_sequences.select(
         F.date_format("ts", "yyyy-MM").alias("m")
     ).agg(F.min("m")).first()[0]
-    p.refresh_months(tiny_sequences, [month])
+    # a correction inside the month: refreshing an unchanged input is a
+    # no-op that appends no manifest row
+    corrected = tiny_sequences.withColumn(
+        "n_tok",
+        F.when(F.date_format("ts", "yyyy-MM") == month, F.col("n_tok") * 2)
+        .otherwise(F.col("n_tok")),
+    )
+    p.refresh_months(corrected, [month])
     fresh = _manifest(p)[n_before:]
     refresh_rows = [r for r in fresh if r["status"] == "REFRESH"]
     assert refresh_rows and all(r["p_month"] == month for r in refresh_rows)

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from rtsa_spark.pipeline import TierPipeline
 
@@ -652,3 +653,112 @@ def test_subset_refresh_does_not_mask_other_stale_months(
         .collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"encode_tiers": ("hourly",), "snapshot_tiers": ("hourly", "daily")}],
+    ids=["plain", "snapshot"],
+)
+def test_rerun_after_sync_rebuilds_what_the_sync_replaced(
+    spark, tiny_sequences, tmp_path, kw
+):
+    """run(A), sync(B), run(A): the first run's SUCCESS rows still carry
+    A's fingerprints, but the latest rows carry B's, so the second run(A)
+    must rebuild every stage and leave the base equal to a fresh run(A).
+    It also records A's month map, so a following sync(B) refreshes."""
+    from rtsa_spark.pipeline import content_fingerprint
+
+    a = tiny_sequences
+    drop = (F.date_format("ts", "yyyy-MM") == "2024-02") & (
+        F.pmod(F.xxhash64("doc_id"), F.lit(10)) == 0
+    )
+    b = a.where(~drop)
+    assert b.count() < a.count()
+    base = str(tmp_path / "base")
+    TierPipeline(spark, base, **kw).run(a)
+    assert TierPipeline(spark, base, **kw).sync(b)["mode"] == "refresh"
+    p = TierPipeline(spark, base, **kw)
+    p.run(a)
+
+    fresh = TierPipeline(spark, str(tmp_path / "fresh"), **kw)
+    for stage in fresh.run(a):
+        assert content_fingerprint(p.read_stage(stage)) == content_fingerprint(
+            fresh.read_stage(stage)
+        ), stage
+
+    again = TierPipeline(spark, base, **kw).sync(b)
+    assert again["mode"] == "refresh" and again["replaced"]["rollup_raw"] > 0
+
+
+def test_sync_fingerprints_come_from_its_writes_and_a_repeat_is_a_noop(
+    spark, tiny_sequences, tmp_path, monkeypatch
+):
+    """A refresh-mode sync scans each refreshed tier back once and learns
+    the gapfilled stage's fingerprint, the input of its metrics stage,
+    from the gapfill write.  Refreshing the same input again appends no
+    ledger or manifest row and rewrites no file."""
+    import rtsa_spark.pipeline as pipeline_mod
+
+    base = str(tmp_path / "sync_fp")
+    p = TierPipeline(
+        spark, base, encode_tiers=("hourly",), snapshot_tiers=("hourly", "daily")
+    )
+    p.run(tiny_sequences)
+    feb = F.date_format(F.col("ts"), "yyyy-MM") == "2024-02"
+    corrected = tiny_sequences.withColumn(
+        "n_tok", F.when(feb, F.col("n_tok") * 2).otherwise(F.col("n_tok"))
+    )
+    calls = []
+    real = pipeline_mod.content_fingerprint
+    with monkeypatch.context() as mp:
+        mp.setattr(
+            pipeline_mod,
+            "content_fingerprint",
+            lambda df: calls.append(1) or real(df),
+        )
+        res = p.sync(corrected)
+    assert res["mode"] == "refresh" and res["replaced"]["rollup_raw"] > 0
+    assert len(calls) == len(p.tiers) == 4
+    metrics = [r for r in p._ledger() if r["stage"] == "metrics_daily"][-1]
+    assert metrics["run_id"] == p.run_id and metrics["status"] == "SUCCESS"
+    assert metrics["fingerprint"] == real(p.read_stage("gapfilled_daily"))
+
+    ledger = p._ledger()
+    manifest = os.path.getsize(p._partition_ledger_path)
+    digests = _file_digests(base)
+    assert p.refresh_months(corrected, ["2024-02"]) == {}
+    assert p._ledger() == ledger
+    assert os.path.getsize(p._partition_ledger_path) == manifest
+    assert _file_digests(base) == digests
+
+
+def test_refresh_that_leaves_a_tier_unchanged_skips_what_is_built_on_it(
+    spark, tiny_sequences, tmp_path
+):
+    """A correction that moves rows between minutes of the same hour
+    changes the raw tier but not the hourly one: the refresh rewrites
+    only the raw and hourly rollups, and every stage still equals a fresh
+    run over the corrected input."""
+    from rtsa_spark.pipeline import content_fingerprint
+
+    base = str(tmp_path / "same_hour")
+    p = TierPipeline(spark, base)
+    p.run(tiny_sequences)
+    feb = F.date_format(F.col("ts"), "yyyy-MM") == "2024-02"
+    corrected = tiny_sequences.withColumn(
+        "ts", F.when(feb, F.date_trunc("hour", "ts")).otherwise(F.col("ts"))
+    )
+    n_ledger = len(p._ledger())
+    replaced = p.refresh_changed(corrected)
+    assert set(replaced) == {"rollup_raw", "rollup_hourly"}
+    assert [r["stage"] for r in p._ledger()[n_ledger:]] == [
+        "rollup_raw",
+        "rollup_hourly",
+    ]
+
+    fresh = TierPipeline(spark, str(tmp_path / "same_hour_truth"))
+    for stage in fresh.run(corrected):
+        assert content_fingerprint(p.read_stage(stage)) == content_fingerprint(
+            fresh.read_stage(stage)
+        ), stage

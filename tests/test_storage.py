@@ -1,14 +1,6 @@
-"""Bucketed tier tables: layout survives round-trip and kills the shuffle.
-
-The claims under test are physical-plan properties (the point of the
-feature), not just row equality:
-
-- co-bucketed tiers join on ``source`` with NO shuffle Exchange on either
-  side;
-- ``groupBy("source")`` over a bucketed tier aggregates with NO Exchange;
-- the same join over plain parquet DOES shuffle (the control — proves the
-  assertion would catch a regression);
-- content round-trips exactly and ``bucket_spec`` reports the layout.
+"""Physical layout of published tiers: the z-order key and clustering
+(hand-replayed Morton keys, file-skipping audit, per-file key order) and
+the publish exchange (hash on the month, never a sampled range exchange).
 """
 
 from __future__ import annotations
@@ -17,104 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from rtsa_spark.operators.rollup import rollup_ladder
-from rtsa_spark.storage import bucket_spec, read_bucketed, write_bucketed
-
-
-@pytest.fixture(scope="module")
-def bucketed_tiers(spark, tiny_sequences, tmp_path_factory):
-    base = tmp_path_factory.mktemp("bucketed")
-    tiers = rollup_ladder(tiny_sequences)
-    for name in ("hourly", "daily"):
-        write_bucketed(
-            tiers[name],
-            f"t_{name}_b",
-            n_buckets=8,
-            path=str(base / name),
-        )
-    yield {"hourly": tiers["hourly"], "daily": tiers["daily"]}
-    for name in ("hourly", "daily"):
-        spark.sql(f"DROP TABLE IF EXISTS t_{name}_b")
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_roundtrip_and_spec(spark, bucketed_tiers):
-    got = read_bucketed(spark, "t_daily_b")
-    want = bucketed_tiers["daily"]
-    assert got.count() == want.count()
-    # order-independent content equality via the pipeline fingerprint trick
-    a = got.agg(F.bit_xor(F.xxhash64(*sorted(got.columns)))).first()[0]
-    b = want.agg(F.bit_xor(F.xxhash64(*sorted(want.columns)))).first()[0]
-    assert a == b
-    assert bucket_spec(spark, "t_daily_b") == (8, ["source"])
-    assert bucket_spec(spark, "t_hourly_b")[0] == 8
-
-
-def test_cobucketed_join_has_no_shuffle(spark, bucketed_tiers):
-    h = read_bucketed(spark, "t_hourly_b").groupBy("source").agg(
-        F.sum("n_tok_sum").alias("h_tok")
-    )
-    d = read_bucketed(spark, "t_daily_b").groupBy("source").agg(
-        F.sum("n_tok_sum").alias("d_tok")
-    )
-    # forbid the broadcast fallback so the test exercises the bucket path
-    with_conf = spark.conf
-    prev = with_conf.get("spark.sql.autoBroadcastJoinThreshold")
-    with_conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = h.join(d, "source").where("h_tok != d_tok")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        # and the tiers really do agree (cascade exactness over the layout)
-        assert joined.count() == 0
-    finally:
-        with_conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_bucketed_groupby_has_no_shuffle(spark, bucketed_tiers):
-    agg = (
-        read_bucketed(spark, "t_daily_b")
-        .groupBy("source")
-        .agg(F.sum("n_seq").alias("o"))
-    )
-    assert "Exchange" not in _plan(agg)
-    assert agg.count() > 0
-
-
-def test_plain_parquet_control_does_shuffle(spark, bucketed_tiers, tmp_path):
-    """The control: without bucketing the same join re-hashes both sides —
-    proves the no-Exchange assertions above have teeth."""
-    p = str(tmp_path / "plain")
-    bucketed_tiers["daily"].write.mode("overwrite").parquet(p)
-    plain = spark.read.parquet(p)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = plain.alias("a").join(plain.alias("b"), "source")
-        assert "Exchange" in _plan(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_bucket_count_mismatch_is_detectable(spark, bucketed_tiers, tmp_path):
-    write_bucketed(
-        bucketed_tiers["daily"],
-        "t_daily_b4",
-        n_buckets=4,
-        path=str(tmp_path / "b4"),
-    )
-    try:
-        assert bucket_spec(spark, "t_daily_b4")[0] == 4
-        assert bucket_spec(spark, "t_hourly_b")[0] == 8
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_daily_b4")
-
-
-def test_write_bucketed_validates(spark, bucketed_tiers):
-    with pytest.raises(ValueError):
-        write_bucketed(bucketed_tiers["daily"], "t_bad", n_buckets=0)
 
 
 # --------------------------------------------------------------- z-order
