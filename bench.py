@@ -343,7 +343,7 @@ def run_bench(sf_dir: str, cores: int) -> dict:
         "new_stages_r4c": new_r4c,
         "new_stages_r4d": new_r4d,
     }
-    out.update(jit_accounting(spark))
+    out.update(jvm_accounting(spark))
     # CPU of the whole tree BEFORE stop: JVM utime+stime+children (python
     # workers) from /proc (py4j does not reap the JVM into rusage)
     import resource as _res
@@ -365,25 +365,31 @@ def run_bench(sf_dir: str, cores: int) -> dict:
     return out
 
 
-def jit_accounting(spark) -> dict:
-    """Whole-run JIT and codegen cost of the driver JVM (local mode runs
-    every task in it): HotSpot's accumulated compiler-thread time, and the
-    count and Janino compile time of Spark's generated classes.
+def jvm_accounting(spark) -> dict:
+    """Whole-run JIT, codegen and GC cost of the driver JVM (local mode
+    runs every task in it): HotSpot's accumulated compiler-thread time,
+    the count and Janino compile time of Spark's generated classes, and
+    the collections, collection time and names of the JVM's garbage
+    collectors (``PS Scavenge``/``PS MarkSweep`` under ParallelGC).
 
     ``CodegenMetrics.METRIC_COMPILATION_TIME`` is a histogram of per-class
     compile ms; its reservoir keeps every sample up to 1028 compiles, so
     the sum is exact until then and a scaled sample sum beyond."""
     jvm = spark.sparkContext._jvm
-    jit_ms = jvm.java.lang.management.ManagementFactory.getCompilationMXBean(
-    ).getTotalCompilationTime()
+    mx = jvm.java.lang.management.ManagementFactory
+    jit_ms = mx.getCompilationMXBean().getTotalCompilationTime()
     hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     n = hist.getCount()
     kept = list(hist.getSnapshot().getValues())
     codegen_ms = sum(kept) * n / len(kept) if kept else 0.0
+    gcs = list(mx.getGarbageCollectorMXBeans())
     return {
         "jit_compile_s": round(jit_ms / 1000, 3),
         "codegen_classes": int(n),
         "codegen_compile_s": round(codegen_ms / 1000, 3),
+        "gc_s": round(sum(b.getCollectionTime() for b in gcs) / 1000, 3),
+        "gc_collections": int(sum(b.getCollectionCount() for b in gcs)),
+        "gc_collector": ",".join(b.getName() for b in gcs),
     }
 
 

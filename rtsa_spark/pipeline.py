@@ -22,7 +22,10 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
 - one ladder walk serves ``run()`` and every month-scoped refresh, and
   SKIPS a stage when it exists and its LATEST lineage row carries the
   stage's input fingerprint (an older matching row says nothing about
-  what a later refresh left behind). The fingerprint is a CONTENT hash
+  what a later refresh left behind); a snapshot-backed stage is skipped
+  only while its main branch has committed nothing but compaction since
+  that row's ``snapshot_id`` (a ``stage_store`` delete or merge writes no
+  lineage row). The fingerprint is a CONTENT hash
   (``count:bit_xor(xxhash64(*cols))``, order-independent) — a corrected
   input with the same row count no longer silently skips recomputation.
   A published stage's own fingerprint, the input of the stages built on
@@ -71,7 +74,7 @@ from rtsa_spark.operators.encode import encode_tier
 from rtsa_spark.operators.gapfill import gapfill_linear
 from rtsa_spark.operators.metrics import compute_metrics
 from rtsa_spark.operators.rollup import TIER_ORDER, rollup_next, rollup_raw
-from rtsa_spark.snapshot import SnapshotStore
+from rtsa_spark.snapshot import MAIN, SnapshotStore
 from rtsa_spark.storage import (
     cluster_for_publish,
     fingerprint_aggs,
@@ -334,12 +337,26 @@ class TierPipeline:
         ``fingerprint`` and the stage exists.  ``_stage_exists``, not
         ``os.path.exists``: a snapshot-backed stage's dir exists as soon
         as its store object is built, with no committed snapshot
-        behind it."""
+        behind it.  A snapshot-backed stage can also change through
+        :meth:`stage_store` (``delete_where``, ``merge``,
+        ``fast_forward``) without a ledger row, so its main branch must
+        have committed nothing but layout-only rewrites (compaction)
+        since the row's ``snapshot_id``."""
         rows = [r for r in self._ledger() if r["stage"] == stage]
-        return (
-            bool(rows)
+        if not (
+            rows
             and rows[-1]["fingerprint"] == fingerprint
             and self._stage_exists(stage)
+        ):
+            return False
+        if not self._is_snapshot_stage(stage):
+            return True
+        sid = rows[-1].get("snapshot_id")
+        return sid is not None and all(
+            c["op"] == "rewrite"
+            or (c["op"] == "refresh" and c.get("reason") == "compact")
+            for c in self._store(stage).data_commits(MAIN)
+            if c["snapshot_id"] > sid
         )
 
     # ------------------------------------------------------------ stages

@@ -8,6 +8,7 @@ code runs unmodified on a multi-executor cluster via ``spark-submit
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -31,11 +32,22 @@ def _caller_java_opts(extra_conf: dict[str, str] | None) -> str:
     )
 
 
-def _size_jvm_threads(n: int, caller_opts: str = "") -> None:
-    """Size a local ``n``-core JVM's GC and JIT compiler threads in
-    ``JAVA_TOOL_OPTIONS``.
+#: A HotSpot collector choice; a JVM given two of them refuses to start.
+_COLLECTOR_FLAG = (
+    r"-XX:\+Use(?:Serial|Parallel|ParallelOld|G1|Z|Shenandoah|Epsilon|ConcMarkSweep)GC\b"
+)
 
-    GC: ``ParallelGCThreads=max(2, n)``, ``ConcGCThreads=max(1, n // 2)``.
+
+def _size_jvm_threads(n: int, caller_opts: str = "") -> None:
+    """Pick the garbage collector and size a local ``n``-core JVM's GC and
+    JIT compiler threads in ``JAVA_TOOL_OPTIONS``.
+
+    Collector: ``-XX:+UseParallelGC``, the throughput collector. A cold
+    batch round pays only for total CPU, not for pause times, and G1's
+    concurrent refinement and marking threads and its write barriers cost
+    more CPU than ParallelGC's stop-the-world young collections.
+    GC threads: ``ParallelGCThreads=max(2, n)``; ParallelGC has no
+    concurrent phase, so no ``ConcGCThreads``.
     JIT: ``CICompilerCount=1 + max(1, cores // 4)``, where ``cores`` is
     ``n`` capped by the CPUs this process may use; HotSpot refuses a count
     below 2 and does not start.
@@ -43,19 +55,23 @@ def _size_jvm_threads(n: int, caller_opts: str = "") -> None:
     Our fragment is tagged ``-Drtsa.gc.auto`` so a later call — in this
     process or a child that inherited the env — replaces it with the new
     size instead of mistaking it for a caller's setting. A caller's flag
-    wins per group: a caller's ``CICompilerCount`` does not stop GC sizing,
-    and a caller's GC thread count does not stop compiler sizing. The two
-    GC flags move together, since G1 refuses ``ConcGCThreads`` above
-    ``ParallelGCThreads``. A caller's flags count wherever they are set:
-    in ``JAVA_TOOL_OPTIONS`` or in ``caller_opts``, the driver's Spark-conf
-    JVM options (:func:`_caller_java_opts`), which the JVM applies after
-    ours."""
-    import re
+    wins per group, and the three groups are independent:
 
+    - collector: any ``-XX:+Use…GC`` collector choice. HotSpot refuses
+      two ("Multiple garbage collectors selected"), so we add none then;
+    - GC threads: ``ParallelGCThreads`` or ``ConcGCThreads``. A caller who
+      picks G1 keeps that pair consistent (G1 refuses ``ConcGCThreads``
+      above ``ParallelGCThreads``);
+    - compiler threads: ``CICompilerCount``.
+
+    A caller's flags count wherever they are set: in ``JAVA_TOOL_OPTIONS``
+    or in ``caller_opts``, the driver's Spark-conf JVM options
+    (:func:`_caller_java_opts`), which the JVM applies after ours."""
     prev = os.environ.get("JAVA_TOOL_OPTIONS", "")
     ours = re.search(
         r"-Drtsa\.gc\.auto=\S+"
-        r"(?:\s+-XX:(?:ParallelGCThreads|ConcGCThreads|CICompilerCount)=\d+)*",
+        r"(?:\s+-XX:(?:\+UseParallelGC|"
+        r"(?:ParallelGCThreads|ConcGCThreads|CICompilerCount)=\d+))*",
         prev,
     )
     if ours:
@@ -63,11 +79,10 @@ def _size_jvm_threads(n: int, caller_opts: str = "") -> None:
     cores = min(n, len(os.sched_getaffinity(0)))
     owned = f"{prev} {caller_opts}"
     opts = [f"-Drtsa.gc.auto={n}"]
+    if not re.search(_COLLECTOR_FLAG, owned):
+        opts.append("-XX:+UseParallelGC")
     if "ParallelGCThreads" not in owned and "ConcGCThreads" not in owned:
-        opts += [
-            f"-XX:ParallelGCThreads={max(2, n)}",
-            f"-XX:ConcGCThreads={max(1, n // 2)}",
-        ]
+        opts.append(f"-XX:ParallelGCThreads={max(2, n)}")
     if "CICompilerCount" not in owned:
         opts.append(f"-XX:CICompilerCount={1 + max(1, cores // 4)}")
     fragment = " ".join(opts)
@@ -89,33 +104,43 @@ def get_spark(
     Shuffle partitions default to ~cores locally — on a real cluster pass
     ``shuffle_partitions`` sized to total executor cores * 2-3.
 
-    A local JVM with an explicit core count ``n`` gets its GC and JIT
-    compiler threads sized by ``n`` (``_size_jvm_threads``), as a YARN or
-    K8s executor's are by its container: ``ParallelGCThreads=max(2, n)``,
-    ``ConcGCThreads=max(1, n // 2)`` and ``CICompilerCount=1 + max(1,
-    n // 4)``, with ``n`` capped by the CPUs this process may use for the
-    compiler count. That is one C1 thread plus one C2 thread per four
-    cores: 2 up to 7 cores, 3 at 8, 5 at 16 and 9 at 32, against HotSpot's
-    own 3/4/12/15 at 4/8/16/32 CPUs. In a cold round most CPU goes to C2
-    compiling Spark, Janino and JDK infrastructure the round barely
-    reuses, so one C2 thread saves CPU while the queries' own generated
-    code still gets compiled. Measured only at ``n = 4`` (4-vCPU VM; cold
-    = perfbench CPU-s per round, median of 10 ``analytics`` and 8
-    ``build`` runs; warm = ``bench.py`` sf0.1 total, median of 5 runs; C1 only from
-    single probe runs):
+    A local JVM with an explicit core count ``n`` runs the throughput
+    collector and gets its GC and JIT compiler threads sized by ``n``
+    (``_size_jvm_threads``), as a YARN or K8s executor's are by its
+    container: ``-XX:+UseParallelGC``, ``ParallelGCThreads=max(2, n)`` and
+    ``CICompilerCount=1 + max(1, n // 4)``, with ``n`` capped by the CPUs
+    this process may use for the compiler count. That is one C1 thread
+    plus one C2 thread per four cores: 2 up to 7 cores, 3 at 8, 5 at 16
+    and 9 at 32, against HotSpot's own 3/4/12/15 at 4/8/16/32 CPUs. In a
+    cold round most CPU goes to C2 compiling Spark, Janino and JDK
+    infrastructure the round barely reuses, so one C2 thread saves CPU
+    while the queries' own generated code still gets compiled. A batch
+    round pays for total CPU, not for pause times, so ParallelGC replaces
+    HotSpot's default G1 and its concurrent threads and write barriers.
+    Measured only at ``n = 4`` (4-vCPU VM; cold = perfbench CPU-s per
+    round, median of alternating runs against the previous setting; warm
+    = ``bench.py`` sf0.1 total, median; C1 only from single probe runs).
+    The last two rows are a later set, after other engine changes and on
+    a differently loaded host, so compare them with each other:
 
-    ======================  ===========  =========  ================
-    JIT setting             analytics    build      warm sf0.1 (s)
-    ======================  ===========  =========  ================
-    HotSpot default (3)     44.1         54.1       28.9
-    ``CICompilerCount=2``   37.0         47.5       30.3
-    C1 only (probe)         20.3-21.5    30.8       55.9
-    ======================  ===========  =========  ================
+    ==========================  ===========  =========  ================
+    JVM setting                 analytics    build      warm sf0.1 (s)
+    ==========================  ===========  =========  ================
+    HotSpot default (3), G1     44.1         54.1       28.9
+    ``CICompilerCount=2``, G1   37.0         47.5       30.3
+    C1 only (probe), G1         20.3-21.5    30.8       55.9
+    ``CICompilerCount=2``, G1   15.98        18.77      14.27
+    + ParallelGC (the default)  13.75        17.67      13.39
+    ==========================  ===========  =========  ================
 
     A scheduled cold job may opt into C1 only (``-XX:TieredStopAtLevel=1``
     in ``JAVA_TOOL_OPTIONS`` or ``spark.driver.extraJavaOptions``): it
-    halves a cold round and nearly doubles warm time. A caller's own GC
-    or compiler thread flags win over ours in either place.
+    halves a cold round and nearly doubles warm time. A caller's own
+    collector, GC thread or compiler thread flags win over ours in either
+    place. The fragment stays in ``JAVA_TOOL_OPTIONS``, so a JVM that a
+    child process starts inherits it; a child that names its own collector
+    on its command line must drop the fragment first (README "JVM thread
+    sizing").
     """
     # Make the package importable in executor python workers regardless of
     # the caller's cwd. Local mode: workers inherit PYTHONPATH. Cluster mode:
@@ -140,12 +165,15 @@ def get_spark(
     if not external_master:
         n = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or "*"
         builder = builder.master(f"local[{n}]")
-        # Size JVM GC and compiler threads by the EXECUTOR core allocation,
-        # not by nproc: G1's default on a 32-CPU box is ~23 parallel GC
-        # threads, which taxes a local[4] JVM ~20% extra CPU on a
-        # quota-limited host (measured: 80M-row ladder 41.3s -> 34.8s at
-        # local[4] with the cap). This mirrors what YARN/K8s executors get
-        # anyway — threads sized to the container's cores — so local
+        # Run the throughput collector, and size JVM GC and compiler
+        # threads by the EXECUTOR core allocation, not by nproc. HotSpot's
+        # default on a 32-CPU box is ~23 parallel GC threads, which taxed a
+        # local[4] JVM ~20% extra CPU on a quota-limited host (measured
+        # under G1: 80M-row ladder 41.3s -> 34.8s at local[4] with the
+        # cap). A batch round pays for total CPU, not for pause times, so
+        # ParallelGC's stop-the-world collections replace G1's concurrent
+        # threads and write barriers. Threads sized to the container's
+        # cores are what YARN/K8s executors get anyway, so local
         # measurements extrapolate to cluster behavior. Only applied when
         # WE launch the JVM (local mode) with an explicit core count; see
         # _size_jvm_threads for the caller-vs-auto distinction.

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from rtsa_spark.pipeline import TierPipeline
+from tests.fragment import split_parquet_dir
 
 
 def _tier_hash(spark, path):
@@ -762,3 +763,52 @@ def test_refresh_that_leaves_a_tier_unchanged_skips_what_is_built_on_it(
         assert content_fingerprint(p.read_stage(stage)) == content_fingerprint(
             fresh.read_stage(stage)
         ), stage
+
+
+def test_run_after_a_stage_store_delete_rebuilds_the_stage(
+    spark, tiny_sequences, tmp_path
+):
+    """A ``stage_store`` delete commits a snapshot but writes no lineage
+    row, so the stage's latest row no longer describes it.  The next
+    run(A) must rebuild the stage instead of skipping it (and rolling the
+    deletion up the ladder): every stage then equals a fresh run(A)."""
+    from rtsa_spark.pipeline import content_fingerprint
+
+    kw = {"snapshot_tiers": ("hourly",)}
+    base = str(tmp_path / "deleted")
+    p = TierPipeline(spark, base, **kw)
+    p.run(tiny_sequences)
+    before = p.read_stage("rollup_hourly").count()
+    assert p.stage_store("rollup_hourly").delete_where(F.col("source") == "s001")
+    assert p.read_stage("rollup_hourly").count() < before
+
+    again = TierPipeline(spark, base, **kw)
+    again.run(tiny_sequences)
+    fresh = TierPipeline(spark, str(tmp_path / "deleted_truth"), **kw)
+    for stage in fresh.run(tiny_sequences):
+        assert content_fingerprint(again.read_stage(stage)) == content_fingerprint(
+            fresh.read_stage(stage)
+        ), stage
+
+
+def test_run_after_compaction_rewrites_nothing(spark, tiny_sequences, tmp_path):
+    """Compaction commits layout-only snapshots (a whole-table rewrite, a
+    month-scoped refresh tagged ``reason="compact"``) and no lineage row;
+    a following run(A) skips every stage."""
+    kw = {"snapshot_tiers": ("hourly",)}
+    base = str(tmp_path / "compacted")
+    p = TierPipeline(spark, base, **kw)
+    p.run(tiny_sequences)
+    store = p.stage_store("rollup_hourly")
+    for months in (None, ["2024-02"]):
+        for m, v in store.months().items():
+            if months is None or m in months:
+                split_parquet_dir(spark, store.version_dir(m, v), 4)
+        assert p.compact_stage("rollup_hourly", target_rows=10**9, months=months)
+    ops = [c["op"] for c in store.data_commits()]
+    assert ops[-2:] == ["rewrite", "refresh"]
+    n_ledger, head = len(p._ledger()), store.current_snapshot()
+
+    TierPipeline(spark, base, **kw).run(tiny_sequences)
+    assert len(p._ledger()) == n_ledger
+    assert store.current_snapshot() == head

@@ -274,11 +274,12 @@ cores immediately before AND after it. All attempts are logged in
 BENCH_scaling.json. Measurement note: {note}
 Measured at commit `{commit}`.
 
-Both legs size JVM GC worker threads to the executor core allocation
-(rtsa_spark/session.py) instead of G1's nproc-derived default (~23
-threads on this box), which taxed small-core legs ~20% CPU — the same
-per-container GC sizing a YARN/K8s executor gets, so local pairs
-extrapolate to cluster behavior.
+Both legs run the throughput collector (ParallelGC) and size its worker
+threads and the JIT compiler threads to the executor core allocation
+(rtsa_spark/session.py), instead of HotSpot's G1 default with
+nproc-derived thread counts (~23 GC threads on this box, which taxed
+small-core legs ~20% CPU) — the same per-container sizing a YARN/K8s
+executor gets, so local pairs extrapolate to cluster behavior.
 
 ## Wall-clock pair (N=1 -> 4N=4, steady-state: 2nd ladder pass in a warm JVM)
 
