@@ -23,6 +23,12 @@ continuous-aggregate + retention-policy pattern. Two layers:
 Scale shape: the DataFrame filter is a partition-pruned scan (bucket
 predicates reach the reader); the file expiry never reads data at all —
 it lists one directory level.
+
+There is no small-file compaction layer: every engine write publishes
+each month as one file per write task
+(:func:`rtsa_spark.storage.cluster_for_publish`), so a month only splits
+where AQE splits it on purpose, for write parallelism.  A snapshot-backed
+stage re-clusters through :meth:`rtsa_spark.snapshot.SnapshotStore.rewrite`.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 #: default keep windows per tier (coarser tiers keep longer; None = forever)
 DEFAULT_POLICY = {
@@ -128,67 +134,3 @@ def expire_partitions(
             deleted.append(name)
     return deleted
 
-
-def file_stats(
-    df: DataFrame, bucket_col: str = "bucket_start"
-) -> DataFrame:
-    """Physical-layout audit of a tier directory: one row per parquet
-    file with its row count and bucket span — the input to
-    :func:`plan_compaction` and the "why is this scan slow" first look.
-    ``input_file_name()`` is evaluated task-side, so the audit is one
-    scan + one map-side-combinable groupBy.
-    """
-    return (
-        df.select(
-            F.input_file_name().alias("file"),
-            F.col(bucket_col).alias("_b"),
-        )
-        .groupBy("file")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.min("_b").alias("bucket_min"),
-            F.max("_b").alias("bucket_max"),
-        )
-    )
-
-
-def plan_compaction(stats: DataFrame, target_rows: int) -> DataFrame:
-    """Greedy small-file compaction plan from :func:`file_stats` output —
-    the engine-side analog of Iceberg's ``rewrite_data_files``: files
-    under ``target_rows`` are assigned to compaction groups whose running
-    total stays under ``2 * target_rows``, in bucket order so each
-    rewritten file stays time-clustered (preserves bucket pruning).
-
-    Emits the sub-target files with a ``group`` id (files already at or
-    above target are excluded — never rewritten).  The plan is
-    key-ordered window arithmetic (prefix sums), deterministic; the
-    actual rewrite is ``spark.read.parquet([files]).coalesce(1).write``
-    per group, owned by the caller's job scheduler.
-
-    Driver never sees the data — only the file-stats table (file-count
-    sized).
-    """
-    if target_rows < 1:
-        raise ValueError(f"target_rows must be >= 1, got {target_rows}")
-    small = stats.where(F.col("n_rows") < target_rows)
-    w = Window.orderBy("bucket_min", "file").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # group = running_rows_before_this_file div (2*target): prefix-sum
-    # binning keeps every group's total under 2*target + one file's rows.
-    # Integer `div` (operands nonnegative, so div == floor) — a float
-    # quotient would misbin once the BIGINT prefix sum passes 2^53.
-    run = (F.sum("n_rows").over(w) - F.col("n_rows")).alias("_run")
-    return small.select(
-        "file",
-        "n_rows",
-        "bucket_min",
-        "bucket_max",
-        run,
-    ).select(
-        "file",
-        "n_rows",
-        "bucket_min",
-        "bucket_max",
-        F.expr(f"_run div {2 * int(target_rows)}").cast("bigint").alias("group"),
-    )

@@ -57,6 +57,24 @@ def _finalize(df: DataFrame) -> DataFrame:
     )
 
 
+def _merge_partials(df: DataFrame, bucket) -> DataFrame:
+    """Merge tier partials per ``(source, bucket)``, gap-filled rows
+    excluded: count->sum, sum->sum, min->min, max->max, mean re-finalized.
+    The one body behind :func:`rollup_next` and :func:`merge_rollup`."""
+    out = (
+        df.where(~F.col("gapfilled"))
+        .groupBy("source", bucket)
+        .agg(
+            F.sum("n_seq").alias("n_seq"),
+            F.sum("n_tok_sum").alias("n_tok_sum"),
+            F.min("n_tok_min").alias("n_tok_min"),
+            F.max("n_tok_max").alias("n_tok_max"),
+        )
+        .withColumn("gapfilled", F.lit(False))
+    )
+    return _finalize(out).select(ROLLUP_COLS)
+
+
 def rollup_raw(df: DataFrame, ts_col: str = "ts", value_col: str = "n_tok") -> DataFrame:
     """Raw tier: minute-aligned per-source aggregates of the sequence table.
 
@@ -89,18 +107,7 @@ def rollup_next(tier_df: DataFrame, to_tier: str) -> DataFrame:
     if to_tier not in BUCKET_OF or to_tier == "raw":
         raise ValueError(f"bad target tier: {to_tier}")
     bucket = F.date_trunc(BUCKET_OF[to_tier], F.col("bucket_start")).alias("bucket_start")
-    out = (
-        tier_df.where(~F.col("gapfilled"))
-        .groupBy("source", bucket)
-        .agg(
-            F.sum("n_seq").alias("n_seq"),
-            F.sum("n_tok_sum").alias("n_tok_sum"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-        )
-        .withColumn("gapfilled", F.lit(False))
-    )
-    return _finalize(out).select(ROLLUP_COLS)
+    return _merge_partials(tier_df, bucket)
 
 
 def merge_rollup(existing: DataFrame, delta: DataFrame) -> DataFrame:
@@ -120,18 +127,7 @@ def merge_rollup(existing: DataFrame, delta: DataFrame) -> DataFrame:
     delta-sized, not history-sized.
     """
     both = existing.select(ROLLUP_COLS).unionByName(delta.select(ROLLUP_COLS))
-    out = (
-        both.where(~F.col("gapfilled"))
-        .groupBy("source", "bucket_start")
-        .agg(
-            F.sum("n_seq").alias("n_seq"),
-            F.sum("n_tok_sum").alias("n_tok_sum"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-        )
-        .withColumn("gapfilled", F.lit(False))
-    )
-    return _finalize(out).select(ROLLUP_COLS)
+    return _merge_partials(both, "bucket_start")
 
 
 def rollup_ladder(df: DataFrame, tiers: list[str] | None = None) -> dict[str, DataFrame]:

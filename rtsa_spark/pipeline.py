@@ -23,9 +23,9 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
   SKIPS a stage when it exists and its LATEST lineage row carries the
   stage's input fingerprint (an older matching row says nothing about
   what a later refresh left behind); a snapshot-backed stage is skipped
-  only while its main branch has committed nothing but compaction since
-  that row's ``snapshot_id`` (a ``stage_store`` delete or merge writes no
-  lineage row). The fingerprint is a CONTENT hash
+  only while its main branch has committed nothing but layout-only
+  rewrites since that row's ``snapshot_id`` (a ``stage_store`` delete or
+  merge writes no lineage row). The fingerprint is a CONTENT hash
   (``count:bit_xor(xxhash64(*cols))``, order-independent) — a corrected
   input with the same row count no longer silently skips recomputation.
   A published stage's own fingerprint, the input of the stages built on
@@ -176,7 +176,6 @@ class TierPipeline:
         hist_tiers: tuple[str, ...] = (),
         hist_top_k: int | None = 128,
         encode_tiers: tuple[str, ...] = (),
-        encode_value_col: str = "n_tok_sum",
         snapshot_tiers: tuple[str, ...] = (),
         run_id: str | None = None,
     ):
@@ -199,7 +198,6 @@ class TierPipeline:
         self.hist_tiers = hist_tiers
         self.hist_top_k = hist_top_k
         self.encode_tiers = encode_tiers
-        self.encode_value_col = encode_value_col
         #: rollup tiers stored through :class:`SnapshotStore` instead of a
         #: plain partitioned dir: every publish/refresh is an append-only
         #: snapshot commit, so consumers can time-travel
@@ -310,7 +308,7 @@ class TierPipeline:
         from the manifest alone (driver-side metadata, O(manifest rows),
         zero data files touched — the same promise an Iceberg metadata
         table makes).  Latest manifest row per (stage, p_month) wins
-        across SUCCESS / REFRESH / COMPACT history; months whose latest
+        across SUCCESS / REFRESH history; months whose latest
         row records ``rows = 0`` were deleted and are excluded.  Columns:
         ``stage, p_month, rows, n_files, bytes, status, finished_at,
         run_id`` (+ ``snapshot_id`` where the stage is snapshot-backed).
@@ -340,8 +338,8 @@ class TierPipeline:
         behind it.  A snapshot-backed stage can also change through
         :meth:`stage_store` (``delete_where``, ``merge``,
         ``fast_forward``) without a ledger row, so its main branch must
-        have committed nothing but layout-only rewrites (compaction)
-        since the row's ``snapshot_id``."""
+        have committed nothing but layout-only rewrites
+        (:meth:`SnapshotStore.rewrite`) since the row's ``snapshot_id``."""
         rows = [r for r in self._ledger() if r["stage"] == stage]
         if not (
             rows
@@ -354,7 +352,6 @@ class TierPipeline:
         sid = rows[-1].get("snapshot_id")
         return sid is not None and all(
             c["op"] == "rewrite"
-            or (c["op"] == "refresh" and c.get("reason") == "compact")
             for c in self._store(stage).data_commits(MAIN)
             if c["snapshot_id"] > sid
         )
@@ -866,11 +863,13 @@ class TierPipeline:
             # the published map with ONLY the refreshed months replaced: if
             # the caller named a subset of the months that really changed,
             # the others keep their old fingerprint, so detect_changed_months
-            # still flags them and a later run(corrected) rebuilds them
-            published = self._read_input_months() or {}
-            month_map = {m: fp for m, fp in published.items() if m not in months}
-            month_map.update({m: seq_months[m] for m in months if m in seq_months})
-            if published:  # a pre-month-map table keeps the full input's
+            # still flags them and a later run(corrected) rebuilds them. A
+            # base with no map keeps the whole input's map, which agrees
+            # with the full-input fingerprint its stages then record.
+            published = self._read_input_months()
+            if published is not None:
+                month_map = {m: fp for m, fp in published.items() if m not in months}
+                month_map.update({m: seq_months[m] for m in months if m in seq_months})
                 map_fp = combine_month_fingerprints(month_map)
         out: dict[str, str] = {}
         replaced: dict[str, int] = {}
@@ -924,9 +923,7 @@ class TierPipeline:
                 commit(
                     f"encoded_{tier}",
                     tier_fp,
-                    lambda ms: encode_tier(
-                        tier_rows(ms), value_col=self.encode_value_col
-                    ),
+                    lambda ms: encode_tier(tier_rows(ms), value_col="n_tok_sum"),
                     scoped=True,
                 )
             if tier in self.hist_tiers:
@@ -954,203 +951,22 @@ class TierPipeline:
         return out if months is None else replaced
 
     # ------------------------------------------------- file maintenance
-    def compact_stage(
-        self,
-        stage: str,
-        target_rows: int,
-        months: list[str] | None = None,
-    ) -> dict[str, dict]:
-        """Execute the small-file compaction plan for a published stage —
-        the engine-owned half of Iceberg's ``rewrite_data_files`` that
-        :func:`operators.retention.plan_compaction` deliberately leaves to
-        the table owner.  Per month partition: sub-``target_rows`` files
-        are grouped by the plan, each group with >=2 files is rewritten as
-        ONE file re-sorted on ``(source, time)`` (preserving the
-        :func:`rtsa_spark.storage.cluster_for_publish` row-group-stats
-        invariant), untouched files are hard-linked, and the month dir is
-        swapped atomically — a reader never sees a half-compacted
-        partition, and a crash mid-rebuild leaves the live dir intact.
-
-        Content is bit-identical by construction (same rows, same
-        schema), so stage fingerprints, resume skips, and late-data month
-        maps are all unaffected; only the physical layout changes.  Each
-        compacted month appends a ``COMPACT`` row to the partition
-        manifest (rows unchanged, n_files/bytes shrink) — the operation
-        is auditable, never silent.  Single-file groups are skipped, so
-        re-running is a no-op (idempotent).
-
-        Snapshot-backed stages route through the snapshot log instead of
-        touching files (their version dirs are immutable):
-        :meth:`rtsa_spark.snapshot.SnapshotStore.rewrite` for a whole-
-        table compaction, or a month-scoped layout-only
-        ``refresh_months`` when ``months`` is given.  Either way time
-        travel stays intact and ``expire_snapshots`` later reclaims the
-        fragmented versions.  ``target_rows`` is ignored on this path —
-        a snapshot rewrite always re-clusters the whole month, so the
-        trigger is simply >=2 parquet files in a month's current version
-        dir (which also keeps re-running a no-op).
-
-        Returns ``{month: {"files_before": .., "files_after": ..,
-        "groups": ..}}`` for the months that actually changed.
-        """
-        from rtsa_spark.operators.retention import file_stats, plan_compaction
-
-        if self._is_snapshot_stage(stage):
-            return self._compact_snapshot_stage(stage, months)
-        month_dirs = self._month_dirs(stage)
-        if None in month_dirs:
-            raise ValueError(
-                f"stage {stage!r} is not month-partitioned; compaction "
-                f"operates per partition"
-            )
-        want = set(months) if months is not None else None
-        out: dict[str, dict] = {}
-        for m, mpath in sorted(month_dirs.items()):
-            if want is not None and m not in want:
-                continue
-            df = self.spark.read.parquet(mpath)
-            ts_col = _time_col(df)
-            if ts_col is None:
-                raise ValueError(f"stage {stage!r} has no time column")
-            plan = plan_compaction(file_stats(df, ts_col), target_rows)
-            groups: dict[int, list[str]] = {}
-            for r in plan.collect():  # file-count sized, never data
-                groups.setdefault(r["group"], []).append(r["file"])
-            # rewriting a lone small file gains nothing and would make
-            # compaction re-trigger forever; >=2-file groups only
-            groups = {g: fs for g, fs in groups.items() if len(fs) >= 2}
-            if not groups:
-                continue
-            order = [c for c in ("source", ts_col) if c in df.columns]
-
-            def to_local(f: str) -> str:
-                # input_file_name() yields URIs ("file:///x", sometimes
-                # "file:/x"); os.walk yields plain paths. A mismatch here
-                # would treat a grouped file as untouched AND rewrite it —
-                # duplicated rows — so parse, never strip a fixed prefix.
-                from urllib.parse import unquote, urlparse
-
-                parsed = urlparse(f)
-                return unquote(parsed.path) if parsed.scheme else f
-
-            grouped_files = {
-                to_local(f) for fs in groups.values() for f in fs
-            }
-            n_grouped = sum(len(fs) for fs in groups.values())
-            if len(grouped_files) != n_grouped or not all(
-                os.path.exists(f) for f in grouped_files
-            ):
-                raise RuntimeError(
-                    f"file-URI normalization mismatch in {mpath}: plan "
-                    f"names {n_grouped} files, {len(grouped_files)} "
-                    f"resolved locally — refusing to compact"
-                )
-            tmp = mpath + f"._compact_{self.run_id}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp)
-            files_before = _parquet_files(mpath)
-            for src in files_before:
-                if src not in grouped_files:
-                    os.link(src, os.path.join(tmp, os.path.basename(src)))
-            for g, fs in sorted(groups.items()):
-                gtmp = tmp + f".g{g}"
-                (
-                    self.spark.read.parquet(*fs)
-                    .coalesce(1)
-                    .sortWithinPartitions(*order)
-                    .write.mode("overwrite")
-                    .parquet(gtmp)
-                )
-                parts = [
-                    f for f in os.listdir(gtmp) if f.endswith(".parquet")
-                ]
-                for i, f in enumerate(parts):
-                    os.rename(
-                        os.path.join(gtmp, f),
-                        os.path.join(
-                            tmp, f"compacted-g{g}-{i}-{self.run_id}.parquet"
-                        ),
-                    )
-                shutil.rmtree(gtmp)
-            old = mpath + f"._old_{self.run_id}"
-            os.rename(mpath, old)
-            os.rename(tmp, mpath)
-            shutil.rmtree(old)
-            _, files_after = self._append_manifest(stage, "COMPACT", [m])
-            out[m] = {
-                "files_before": len(files_before),
-                "files_after": files_after,
-                "groups": len(groups),
-            }
-        return out
-
-    def _compact_snapshot_stage(
-        self, stage: str, months: list[str] | None
-    ) -> dict[str, dict]:
-        """Snapshot twin of :meth:`compact_stage`: never touches version
-        dirs in place.  Whole-table → :meth:`SnapshotStore.rewrite` (all
-        months land on ONE fresh clustered version, ``op="rewrite"``);
-        month-scoped → a layout-only ``refresh_months`` re-publishing the
-        CURRENT content of just the fragmented requested months (other
-        months keep their versions).  Content is bit-identical either
-        way; a COMPACT manifest row is appended per accounted month, and
-        months already at <=1 file are skipped so re-running is a no-op
-        (no empty snapshot commits)."""
-        store = self._store(stage)
-        mapping = store.months()
-        want = (
-            sorted(mapping)
-            if months is None
-            else [m for m in months if m in mapping]
-        )
-        before = {
-            m: len(_parquet_files(store.version_dir(m, mapping[m])))
-            for m in want
-        }
-        frag = [m for m in want if before[m] >= 2]
-        if not frag:
-            return {}
-        if months is None:
-            store.rewrite()
-        else:
-            # manifest-pruned read: only the fragmented months' dirs list
-            cur = store.read(months=frag)
-            # layout-only read-modify-write: pin the versions the copy was
-            # read from so a concurrent merge/refresh into a fragmented
-            # month raises CommitConflict instead of being overwritten
-            # with the pre-merge copy (rewrite() self-validates the same
-            # way on the whole-table path)
-            store.refresh_months(
-                cur, frag, extra={"reason": "compact"},
-                expect_versions={m: mapping[m] for m in frag},
-            )
-        self._append_manifest(
-            stage, "COMPACT", None if months is None else frag
-        )
-        after = store.months()
-        return {
-            m: {
-                "files_before": before[m],
-                "files_after": len(_parquet_files(store.version_dir(m, after[m]))),
-                "groups": 1,
-            }
-            for m in frag
-        }
-
     def vacuum(self) -> list[str]:
         """Remove orphans left by CRASHED runs — the parquet-dir analog of
         Iceberg's ``remove_orphan_files``.  Every non-atomic moment in this
         pipeline writes under a dotted marker first (``._tmp_<run>`` stage
-        builds and month-map swaps, ``._compact_<run>`` rebuilds,
-        ``._old_<run>`` pre-swap dirs): a crash between build and rename
+        builds and month-map swaps): a crash between build and rename
         leaves one behind, invisible to every reader (parquet discovery
-        skips dotted paths) but holding disk forever.  Deletes any such
-        entry under the base NOT owned by this live run and returns the
-        removed paths.  One healing exception: a ``._old_`` dir whose live
-        path is MISSING is not an orphan — it is the surviving copy from a
-        crash inside ``compact_stage``'s two-rename swap (old moved aside,
-        replacement not yet renamed in).  Vacuum RESTORES it instead of
-        deleting it, so the month's only remaining data is never reaped.
+        skips dotted paths) but holding disk forever.  Bases that earlier
+        releases compacted in place may also hold ``._compact_<run>``
+        rebuilds and ``._old_<run>`` pre-swap month dirs.  Deletes any
+        such entry under the base NOT owned by this live run and returns
+        the removed paths.  One healing exception: a ``._old_`` dir whose
+        live path is MISSING is not an orphan — it is the surviving copy
+        from a crash inside that compaction's two-rename swap (old moved
+        aside, replacement not yet renamed in).  Vacuum RESTORES it
+        instead of deleting it, so the month's only remaining data is
+        never reaped.
         Safe concurrently with readers (the orphans are
         unreferenced by construction); do not run two writers with the
         same base at once — that is unsupported everywhere here."""

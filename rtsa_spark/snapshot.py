@@ -416,9 +416,8 @@ class SnapshotStore:
     def rewrite(self) -> int:
         """Layout-only compaction commit: republish the CURRENT table
         contents as one fresh version per month (``op="rewrite"``) — the
-        snapshot-safe answer to small-file accretion that
-        ``TierPipeline.compact_stage`` refuses to do in place.  Data files
-        are append-only here, so the rewrite is a new snapshot whose
+        snapshot-safe answer to small-file accretion, which never touches
+        a version dir in place.  Data files are append-only here, so the rewrite is a new snapshot whose
         months all map to the new version: readers of older snapshots
         keep their exact files, time travel stays intact, and
         :meth:`expire` reclaims the fragmented versions once history

@@ -5,7 +5,6 @@ import os
 import pytest
 
 from rtsa_spark.pipeline import TierPipeline
-from tests.fragment import split_parquet_dir
 
 
 def _hashes(spark, path):
@@ -96,8 +95,8 @@ def _jobs_in_group(spark, group, action):
 def test_partition_lineage_manifest(spark, tiny_sequences, tmp_path):
     """Every manifest row's ``rows`` equals an independent Spark count of
     ``read_stage(stage)`` for its month — plain, snapshot-backed and
-    non-partitioned stages, after run, a month-deleting refresh and a
-    compaction — and accounting a stage launches no Spark job."""
+    non-partitioned stages, after run and a month-deleting refresh — and
+    accounting a stage launches no Spark job."""
     import pyspark.sql.functions as F
 
     p = TierPipeline(spark, str(tmp_path / "plin"), snapshot_tiers=("hourly",))
@@ -160,23 +159,6 @@ def test_partition_lineage_manifest(spark, tiny_sequences, tmp_path):
     for t in p.tiers:
         assert set(refreshed[f"rollup_{t}"]) == {last}
         assert refreshed[f"rollup_{t}"][last]["rows"] == 0
-
-    first = months[0]
-    for stage in ("rollup_raw", "rollup_hourly"):
-        split_parquet_dir(spark, p._month_dirs(stage)[first], 3)
-    compacted = assert_counts(
-        appended_by(
-            lambda: [
-                p.compact_stage(s, 10**9, months=[first])
-                for s in ("rollup_raw", "rollup_hourly")
-            ]
-        )
-    )
-    assert {s: set(ms) for s, ms in compacted.items()} == {
-        "rollup_raw": {first},
-        "rollup_hourly": {first},
-    }
-    assert compacted["rollup_raw"][first]["n_files"] == 1
 
     # accounting reads parquet footers only: no Spark job in its group
     n_audit = len(_manifest(p))

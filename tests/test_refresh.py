@@ -6,7 +6,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from rtsa_spark.pipeline import TierPipeline
-from tests.fragment import split_parquet_dir
 
 
 def _tier_hash(spark, path):
@@ -555,8 +554,7 @@ def test_empty_input_rails(spark, tiny_sequences, tmp_path):
 
 def test_read_stage_degenerate_ranges(spark, tiny_sequences, tmp_path):
     """Inverted / half-open ranges and an empty source list return empty
-    or correctly filtered frames, never crash; compaction of a month that
-    does not exist is a no-op."""
+    or correctly filtered frames, never crash."""
     base = str(tmp_path / "ranges")
     p = TierPipeline(spark, base, gapfill_tiers=(), metrics_tiers=())
     p.run(tiny_sequences)
@@ -574,7 +572,6 @@ def test_read_stage_degenerate_ranges(spark, tiny_sequences, tmp_path):
     hi = p.read_stage("rollup_hourly", end="2024-03-01T00:00:00").count()
     assert lo + hi == full.count() and lo > 0 and hi > 0
     assert p.read_stage("rollup_hourly", sources=[]).count() == 0
-    assert p.compact_stage("rollup_hourly", 10**9, months=["2099-01"]) == {}
 
 
 def test_table_status_reflects_current_partitions(
@@ -792,23 +789,47 @@ def test_run_after_a_stage_store_delete_rebuilds_the_stage(
 
 
 def test_run_after_compaction_rewrites_nothing(spark, tiny_sequences, tmp_path):
-    """Compaction commits layout-only snapshots (a whole-table rewrite, a
-    month-scoped refresh tagged ``reason="compact"``) and no lineage row;
-    a following run(A) skips every stage."""
+    """A stage store ``rewrite()`` commits a layout-only snapshot and no
+    lineage row; a following run(A) skips every stage."""
     kw = {"snapshot_tiers": ("hourly",)}
     base = str(tmp_path / "compacted")
     p = TierPipeline(spark, base, **kw)
     p.run(tiny_sequences)
     store = p.stage_store("rollup_hourly")
-    for months in (None, ["2024-02"]):
-        for m, v in store.months().items():
-            if months is None or m in months:
-                split_parquet_dir(spark, store.version_dir(m, v), 4)
-        assert p.compact_stage("rollup_hourly", target_rows=10**9, months=months)
-    ops = [c["op"] for c in store.data_commits()]
-    assert ops[-2:] == ["rewrite", "refresh"]
+    store.rewrite()
+    assert store.data_commits()[-1]["op"] == "rewrite"
     n_ledger, head = len(p._ledger()), store.current_snapshot()
 
     TierPipeline(spark, base, **kw).run(tiny_sequences)
     assert len(p._ledger()) == n_ledger
     assert store.current_snapshot() == head
+
+
+def test_refresh_without_a_month_map_records_the_whole_input(
+    spark, tiny_sequences, tmp_path
+):
+    """A base with no input month map (published before maps existed):
+    refresh_months records the whole input's map, the one that agrees
+    with the full-input fingerprint its stages record, so the input it
+    just refreshed with reads as unchanged."""
+    base = str(tmp_path / "mapless")
+    p = TierPipeline(spark, base, gapfill_tiers=(), metrics_tiers=())
+    p.run(tiny_sequences)
+    os.remove(p._input_months_path)
+
+    feb = F.date_format(F.col("ts"), "yyyy-MM") == "2024-02"
+    corrected = tiny_sequences.withColumn(
+        "n_tok", F.when(feb, F.col("n_tok") * 2).otherwise(F.col("n_tok"))
+    )
+    p.refresh_months(corrected, ["2024-02"])
+    months = {
+        r["m"]
+        for r in corrected.select(F.date_format("ts", "yyyy-MM").alias("m"))
+        .distinct()
+        .collect()
+    }
+    assert set(p._read_input_months()) == months
+    assert p.detect_changed_months(corrected) == {
+        "changed": [], "added": [], "removed": []
+    }
+    assert p.sync(corrected) == {"mode": "refresh", "replaced": {}}

@@ -71,48 +71,3 @@ def test_expire_partitions_month_granular(spark, tmp_path):
     assert back.where("bucket_start >= '2024-03-10'").count() == 22 + 9
     # idempotent: second pass deletes nothing
     assert expire_partitions(base, "daily", "2024-04-09T00:00:00", "30 days") == []
-
-
-def test_file_stats_and_compaction_plan(spark, tmp_path):
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from rtsa_spark.operators.retention import file_stats, plan_compaction
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        ("s", t0 + dt.timedelta(hours=h), h) for h in range(100)
-    ]
-    df = spark.createDataFrame(
-        rows, "source string, bucket_start timestamp, x long"
-    )
-    out = str(tmp_path / "frag")
-    # fragment into 10 files of 10 rows
-    df.repartition(10).write.mode("overwrite").parquet(out)
-    tier = spark.read.parquet(out)
-    st = file_stats(tier)
-    stats = st.collect()
-    # AQE may coalesce the shuffle: file count/sizes vary, totals don't
-    assert len(stats) >= 2
-    assert sum(r["n_rows"] for r in stats) == 100
-    assert all(r["bucket_min"] <= r["bucket_max"] for r in stats)
-    max_file = max(r["n_rows"] for r in stats)
-
-    plan = plan_compaction(st, target_rows=max_file + 1).collect()
-    # every file is sub-target; groups bounded by 2*target + one file
-    assert len(plan) == len(stats)
-    from collections import defaultdict
-
-    totals = defaultdict(int)
-    for r in plan:
-        totals[r["group"]] += r["n_rows"]
-    assert all(v <= 2 * (max_file + 1) + max_file for v in totals.values())
-
-    # files already at/above target are never rewritten
-    assert plan_compaction(st, target_rows=1).count() == 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        plan_compaction(st, 0)
